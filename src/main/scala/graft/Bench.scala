@@ -774,12 +774,6 @@ object Bench {
       // only position-independent hygiene is a fresh heap per query;
       // the ~100ms pause is outside the timed region.
       System.gc()
-      // every run of a checkpoint-using query (q20/q38/q42/q58…) pins
-      // fresh block-manager memory; across 64 queries × 6 runs the
-      // accumulation degrades later queries (r02: q62 read 4.0 s in the
-      // full bench vs 0.56 s isolated). Unpersist what THIS query
-      // pinned once its runs finish; pre-existing memos stay.
-      val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
       val cpu0 = readCpu()
       val t =
         try {
@@ -794,8 +788,8 @@ object Bench {
             s"[bench] ${e.name} breakdown: ${metrics.RuntimeBreakdown.profile(warm).render}")
           median(Seq.fill(timedRuns) {
             // streaming: drop the warmup/previous rep's dead provider
-            // registry before the timed window (see the sweep comment
-            // below + StateStoreHygiene)
+            // registry before the timed window (see the state-store
+            // comment below + StateStoreHygiene)
             if (isStreaming(e.name))
               org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
             time(
@@ -808,23 +802,21 @@ object Bench {
         }
       for ((b0, s0, t0) <- cpu0; (b1, s1, t1) <- readCpu() if t1 > t0)
         stealByQuery(e.name) = (s1 - s0).toDouble / (t1 - t0).toDouble
-      // index memos FIRST, via their own invalidation (Dataset.unpersist
-      // + memo removal): a raw RDD-level unpersist would free the blocks
-      // but leave the memo claiming a materialized index that silently
-      // recomputes per search. Each index-using query rebuilds in its
-      // own warmup, so cost attribution stays honest.
-      // BLOCKING unpersists everywhere in this sweep: an async
-      // unpersist returns immediately and the block-deletion IO lands
-      // inside the NEXT query's timed runs (the r5 witness pass showed
-      // text-heavy queries at 2-3x their isolated times in-sequence —
-      // deletion overlap is the controllable part of that gap). The
-      // sweep runs outside every timed region, so waiting here is free.
-      operators.Ivf.invalidateIndex(blocking = true)
-      operators.Pq.invalidateIndex(blocking = true)
+      // every run of a checkpoint-using query (q20/q38/q42/q58…) pins
+      // fresh block-manager memory; across 64 queries × 6 runs the
+      // accumulation degrades later queries (r02: q62 read 4.0 s in the
+      // full bench vs 0.56 s isolated). Free what THIS query pinned once
+      // its runs finish. That includes the Ivf inverted lists and the Pq
+      // encoded corpus, so each index-using query rebuilds them in its
+      // own warmup. The fitted Ivf centroids and Pq codebooks (plain
+      // arrays, no storage) persist for the JVM: only the first query
+      // that uses a given fit pays for it, in its warmup, never in a
+      // timed run. BLOCKING: an async unpersist returns immediately and the
+      // block-deletion IO lands inside the NEXT query's timed runs (the
+      // r5 witness pass showed text-heavy queries at 2-3x their isolated
+      // times in-sequence). This runs outside every timed region, so
+      // waiting here is free.
       TransientCaches.release(blocking = true)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = true)
-      }
       // streaming runs use a fresh checkpoint each time (re-runs must
       // re-pay the ingest), so each leaves a dead provider set (32
       // RocksDB instances for the rocksdb twins) that Spark unloads

@@ -284,12 +284,16 @@ final class GraftEngine(val spark: SparkSession) {
   def fuzzyPairs(df: DataFrame, keyCol: String): DataFrame =
     operators.Fuzzy.fuzzyPairs(df, keyCol)
 
-  /** Free the intermediate frames operators persisted for plan-sharing
-    * (fuzzyPairs' variant frame, bm25's token counts, phrase-search
-    * postings). Safe at any time — a released frame a live plan still
-    * needs is recomputed, never wrong. Long-lived sessions should call
-    * this after materializing those operators' results; otherwise the
-    * blocks wait for driver GC + the 30 s ContextCleaner cadence.
+  /** Free all storage operators pinned: the frames they persisted for
+    * plan-sharing (fuzzyPairs' variant frame, bm25's token counts,
+    * phrase-search postings), their eager local checkpoints, and the
+    * Ivf/Pq index memos (inverted lists, encoded corpus) — the next ANN
+    * search rebuilds them from the fitted centroids and codebooks, which
+    * stay. Call
+    * it after materializing the operators' results: a released persist
+    * only degrades a live plan to recompute, but a frame still reading
+    * a released local checkpoint fails. Without it, persisted frames
+    * stay cached for the session and checkpoints wait for driver GC.
     */
   def releaseTransientCaches(): Unit = TransientCaches.release()
 

@@ -30,9 +30,9 @@ final case class Tables(spark: SparkSession, dir: String) {
     * split, which would serialize that work onto one core.
     *
     * The fan-out is SIZE-derived (guide §2.2), not the raw session
-    * parallelism: ~32 KiB of source parquet per task
-    * (`SPARK_GRAFT_REBALANCE_TARGET_BYTES`), capped at the session's
-    * shuffle partitions. A KB-scale fixture spread 32 ways measured
+    * parallelism: [[Tables.RebalanceTargetBytes]] of source parquet
+    * per task, capped at the session's shuffle partitions. A KB-scale
+    * fixture spread 32 ways measured
     * SLOWER than 8 ways at the same 32 cores (r14 scaling block, r15
     * q19 profile: the same md5+regex stage reported ~12 s of task CPU
     * at 32 concurrent string tasks vs ~2 s at 8 — allocation/bandwidth
@@ -43,10 +43,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     */
   def documentsRebalanced: DataFrame = {
     val p = spark.sessionState.conf.numShufflePartitions
-    val target = sys.env.getOrElse(
-      "SPARK_GRAFT_REBALANCE_TARGET_BYTES", "32768").toLong
     val bytes = documents.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = (bytes / target).min(BigInt(p)).max(BigInt(1)).toInt
+    val n = (bytes / Tables.RebalanceTargetBytes).min(BigInt(p)).max(BigInt(1)).toInt
     documents.repartition(n, org.apache.spark.sql.functions.col("doc_id"))
   }
   def embeddings: DataFrame = t("embeddings")
@@ -56,6 +54,9 @@ object Tables {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{col, expr}
   import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+
+  /** Source parquet bytes per task of [[Tables.documentsRebalanced]]. */
+  val RebalanceTargetBytes: Long = 32768L
 
   /** The one shared `ts` decode for the events timeline — batch
     * (`Tables.events`) and streaming (`StreamingEvents`) must use the

@@ -49,7 +49,7 @@ object RuntimeBreakdown {
   }
 
   /** QueryExecutions that ran eagerly INSIDE an operator (e.g. the
-    * pair-set materialized by `localCheckpoint(true)` in the dedup
+    * pair-set materialized by `TransientCaches.localCheckpoint` in the dedup
     * path) — their metrics would otherwise be invisible to the walk
     * over the returned frame's plan, leaving those queries' breakdowns
     * at 0%. Operators note them here; `of` folds them in; the bench

@@ -81,12 +81,11 @@ object Balance {
     * and n_chars, on exact doubled average ranks.
     */
   def qualityLengthBias(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), col("lang"), col("n_chars"),
-      round(TextAnalysis.qualityScore(
-        TextAnalysis.tokens(col("text")), col("n_chars")) * S, 0)
-        .cast(LongType).as("si"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(base)
+    val base = graft.TransientCaches.persist(
+      docs.select(col("doc_id"), col("lang"), col("n_chars"),
+        round(TextAnalysis.qualityScore(
+          TextAnalysis.tokens(col("text")), col("n_chars")) * S, 0)
+          .cast(LongType).as("si")))
     // doubled average rank of value v within lang: 2·(# smaller) + c + 1
     def ranks(valueCol: String, out: String): DataFrame = {
       val h = base.groupBy("lang", valueCol).agg(count(lit(1)).as("c"))

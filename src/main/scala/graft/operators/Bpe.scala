@@ -83,38 +83,33 @@ object Bpe {
   def bpeCoverage(tokens: DataFrame, numMerges: Int): DataFrame = {
     val spark = tokens.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet
-    val fin = bpeLoop(tokens, numMerges)._2
-    val r = fin.agg(
-      count(lit(1)).as("terms"),
-      sum(col("freq")).as("occ"),
-      sum(col("freq") * length(col("term")).cast("long")).as("chars"),
-      sum(col("freq") * size(syms(col("s"))).cast("long")).as("symsTot"),
-      sum(when(size(syms(col("s"))) <= 2, col("freq")).otherwise(0L))
-        .as("merged")).head()
+    // driver-built output: free every block this call pinned
+    val r = graft.TransientCaches.releasing {
+      bpeLoop(tokens, numMerges)._2.agg(
+        count(lit(1)).as("terms"),
+        sum(col("freq")).as("occ"),
+        sum(col("freq") * length(col("term")).cast("long")).as("chars"),
+        sum(col("freq") * size(syms(col("s"))).cast("long")).as("symsTot"),
+        sum(when(size(syms(col("s"))) <= 2, col("freq")).otherwise(0L))
+          .as("merged")).head()
+    }
     val (terms, occ, chars, symsTot, merged) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    val out = Seq((terms, occ, chars, symsTot,
+    Seq((terms, occ, chars, symsTot,
       symsTot * 1000000L / occ, merged * 1000000L / occ))
       .toDF("n_terms", "n_occurrences", "total_chars", "total_symbols",
         "syms_per_occ_ppm", "fully_merged_ppm")
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
-    }
-    out
   }
 
   /** The induction loop: per-round (rank, a, b, count, total_symbols)
     * plus the final rewritten vocab frame (still persisted — callers
-    * release it via the snapshot-diff cleanup).
+    * run the loop inside `TransientCaches.releasing`).
     */
   private def bpeLoop(tokens: DataFrame, numMerges: Int)
       : (Seq[(Int, String, String, Long, Long)], DataFrame) = {
     val MemOnly = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    var v = vocab(tokens)
-      .select(col("term"), col("freq"), symInit(col("term")).as("s"))
-      .persist(MemOnly)
+    var v = graft.TransientCaches.persist(vocab(tokens)
+      .select(col("term"), col("freq"), symInit(col("term")).as("s")), MemOnly)
     val learned = (1 to numMerges).map { r =>
       val top = v.filter(size(syms(col("s"))) >= 2)
         .select(col("freq"), explode(adjPairs(syms(col("s")))).as("p"))
@@ -123,7 +118,8 @@ object Bpe {
         .orderBy(desc("cnt"), col("a"), col("b"))
         .limit(1).collect()(0) // ONE row per round — model-sized
       val (a, b, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
-      val next = v.withColumn("s", applyMerge(col("s"), a, b)).persist(MemOnly)
+      val next = graft.TransientCaches.persist(
+        v.withColumn("s", applyMerge(col("s"), a, b)), MemOnly)
       val chk = next.agg(
         sum(when(replace(col("s"), lit(pat(a, b)), lit(rep(a, b))) =!= col("s"),
           1L).otherwise(0L)).as("unconverged"),
@@ -133,7 +129,7 @@ object Bpe {
       require(chk.getLong(0) == 0L,
         s"BPE merge ($a, $b) did not reach its replace fixpoint in " +
           s"$ReplacePasses passes — raise ReplacePasses in BOTH engines")
-      v.unpersist()
+      graft.TransientCaches.unpersist(v)
       v = next
       (r, a, b, cnt, chk.getLong(1))
     }
@@ -148,17 +144,11 @@ object Bpe {
   def bpeMerges(tokens: DataFrame, numMerges: Int): DataFrame = {
     val spark = tokens.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet
-    val (learned, _) = bpeLoop(tokens, numMerges)
-    val result = learned
+    // driver-built output: free every block this call pinned
+    val learned = graft.TransientCaches.releasing(bpeLoop(tokens, numMerges)._1)
+    learned
       .toDF("rank", "sym_a", "sym_b", "pair_count", "total_symbols")
       .orderBy("rank")
-    // driver-built output: free every block this call pinned
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
-    }
-    result
   }
 
   /** The full induction, unrolled: level r = pair counts over v(r−1),

@@ -94,11 +94,10 @@ object Classify {
     // feature frame; unpersisted, each pass re-ran the corruption
     // union + regex feature extraction (every OTHER logregFit call
     // site already persists — this one feeds q292/q294/q257)
-    val feats = logregFeatures(corpusWithCorruptions(
-      Tables(spark, dir).documentsRebalanced))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val feats = graft.TransientCaches.persist(logregFeatures(corpusWithCorruptions(
+      Tables(spark, dir).documentsRebalanced)))
     try logregFit(feats)
-    finally feats.unpersist(blocking = false)
+    finally graft.TransientCaches.unpersist(feats)
   }
 
   /** Score a doc frame under fitted weights: (doc_id, s6) with the
@@ -178,9 +177,7 @@ object Classify {
     * threshold are integer-exact).
     */
   def logregScorecard(docs: DataFrame): DataFrame = {
-    val feats = logregFeatures(corpusWithCorruptions(docs))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(feats)
+    val feats = graft.TransientCaches.persist(logregFeatures(corpusWithCorruptions(docs)))
     val w = logregFit(feats)
     feats
       .select(col("y").cast(IntegerType).as("label"),
@@ -248,9 +245,7 @@ object Classify {
   def nbLangIdConfusion(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     val dec6 = DataTypes.createDecimalType(18, 6)
-    val docBg = docBigramCounts(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(docBg)
+    val docBg = graft.TransientCaches.persist(docBigramCounts(docs))
     // one row per (doc, distinct bigram) — the model-fit and scoring
     // unit. Deliberately NOT persisted: it has exactly two consumers
     // (the model-count fit and the scoring pass) and re-exploding the
@@ -278,10 +273,8 @@ object Classify {
     // instead of re-scanning the 5M-row explode (sum of per-doc counts
     // ≡ the former count over occurrence rows, and the distinct-bg
     // domain is identical).
-    val modelCounts = dbl.groupBy(col("lang").as("m_lang"), col("bg"))
-      .agg(sum(col("c")).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(modelCounts)
+    val modelCounts = graft.TransientCaches.persist(
+      dbl.groupBy(col("lang").as("m_lang"), col("bg")).agg(sum(col("c")).as("c")))
     val v = modelCounts.select(countDistinct(col("bg"))).head().getLong(0)
     val tots = modelCounts.groupBy(col("m_lang")).agg(sum(col("c")).as("tot"))
     // per-lang unseen-bigram floor: ln(1 / (tot_l + V))
@@ -550,10 +543,8 @@ object Classify {
          |       ROUND(SUM(label) * 1.0 / COUNT(*), 6) AS frac_clean
          |FROM scored GROUP BY 1 ORDER BY bin""".stripMargin,
     ) { (s, dir) =>
-      val feats = logregFeatures(
-        corpusWithCorruptions(Tables(s, dir).documentsRebalanced))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(feats)
+      val feats = graft.TransientCaches.persist(logregFeatures(
+        corpusWithCorruptions(Tables(s, dir).documentsRebalanced)))
       val w = logregFit(feats)
       feats
         .select(col("y").cast(IntegerType).as("label"),
@@ -760,10 +751,8 @@ object Classify {
          |FROM sx, nn2, (SELECT unnest([50, 60, 70, 80, 90]) AS tau_pct)
          |GROUP BY tau_pct, n_all ORDER BY tau_pct""".stripMargin,
     ) { (s, dir) =>
-      val feats = logregFeatures(corpusWithCorruptions(
-        Tables(s, dir).documentsRebalanced))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(feats)
+      val feats = graft.TransientCaches.persist(logregFeatures(corpusWithCorruptions(
+        Tables(s, dir).documentsRebalanced)))
       val w = logregFit(feats)
       val sx = feats.select(col("y").cast(IntegerType).as("label"),
           round(sigmoid(zOf(w)) * lit(1e6), 0).cast(LongType).as("s6"))
@@ -904,10 +893,8 @@ object Classify {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables(s, dir).documentsRebalanced
       val w = fittedWeights(s, dir)
-      val sc = scoreDocs(docs, w)
-        .join(docs.select("doc_id", "lang"), "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(sc)
+      val sc = graft.TransientCaches.persist(scoreDocs(docs, w)
+        .join(docs.select("doc_id", "lang"), "doc_id"))
       val gl = sc.agg(count(lit(1)).cast(LongType).as("nn"),
         sum(when(col("s6") >= 500000L, 1L).otherwise(0L)).cast(LongType)
           .as("kk"))
@@ -1010,16 +997,12 @@ object Classify {
            |FROM per, tot ORDER BY bin""".stripMargin
       },
     ) { (s, dir) =>
-      val feats = logregFeatures(
-        corpusWithCorruptions(Tables(s, dir).documentsRebalanced))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(feats)
+      val feats = graft.TransientCaches.persist(logregFeatures(
+        corpusWithCorruptions(Tables(s, dir).documentsRebalanced)))
       val w = logregFit(feats)
-      val scored = feats.select(col("y"),
+      val scored = graft.TransientCaches.persist(feats.select(col("y"),
           col("y").cast(IntegerType).as("label"),
-          round(sigmoid(zOf(w)) * lit(1e6), 0).cast(LongType).as("s6"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(scored)
+          round(sigmoid(zOf(w)) * lit(1e6), 0).cast(LongType).as("s6")))
       val n = scored.count().toDouble
       val shat = col("s6") / lit(1000000.0)
       var a = 1.0; var b = 0.0
@@ -1128,10 +1111,9 @@ object Classify {
            |FROM tiles GROUP BY 1, 2 ORDER BY region, label""".stripMargin
       },
     ) { (s, dir) =>
-      val feats = corpusWithCorruptions(Tables(s, dir).documentsRebalanced)
-        .select(Seq(col("doc_id"), col("y")) ++ featureCols: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(feats)
+      val feats = graft.TransientCaches.persist(
+        corpusWithCorruptions(Tables(s, dir).documentsRebalanced)
+          .select(Seq(col("doc_id"), col("y")) ++ featureCols: _*))
       val steps = logregFitSteps(feats)
       val sCols = steps.zipWithIndex.map { case (w, i) =>
         round(sigmoid(zOf(w)) * lit(1e6), 0).cast(LongType).as(s"s${i + 1}")
@@ -1207,14 +1189,15 @@ object Classify {
     val spark = docs.sparkSession
     import spark.implicits._
     val MemOnly = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val feats = logregFeatures(corpusWithCorruptions(docs)).persist(MemOnly)
+    val feats =
+      graft.TransientCaches.persist(logregFeatures(corpusWithCorruptions(docs)), MemOnly)
     val tw = logregFit(feats)
     // teacher hard label per row, carried WITH x1 so the student frame
     // is one projection of the same persisted features
-    val labeled = feats.select(
+    val labeled = graft.TransientCaches.persist(feats.select(
       when(round(sigmoid(zOf(tw)) * lit(1e6), 0).cast(LongType) >= 500000L,
         lit(1.0)).otherwise(lit(0.0)).as("y"),
-      col("x1")).persist(MemOnly)
+      col("x1")), MemOnly)
     val sw = distillFit(labeled)
     val sKeep = round((lit(1.0) / (lit(1.0) +
       exp(-(lit(sw(0)) + lit(sw(1)) * col("x1"))))) * lit(1e6), 0)
@@ -1225,8 +1208,8 @@ object Classify {
       sum(when(sKeep, 1L).otherwise(0L)).as("n_student_keep"),
       sum(when((col("y") === 1.0) === sKeep, 1L).otherwise(0L)).as("n_agree"))
       .head()
-    feats.unpersist()
-    labeled.unpersist()
+    graft.TransientCaches.unpersist(feats)
+    graft.TransientCaches.unpersist(labeled)
     Seq((sw(0), sw(1), rpt.getLong(0), rpt.getLong(1), rpt.getLong(2),
       rpt.getLong(3), rpt.getLong(3) * 1000000L / rpt.getLong(0)))
       .toDF("student_b", "student_w1", "n_docs", "n_teacher_keep",
@@ -1242,10 +1225,10 @@ object Classify {
     val MemOnly = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
     val keyed = corpusWithCorruptions(docs).withColumn("src",
       when(col("doc_id") < 0, -col("doc_id") - lit(1L)).otherwise(col("doc_id")))
-    val trF = logregFeatures(keyed.filter(pmod(col("src"), lit(5)) =!= 0))
-      .persist(MemOnly)
-    val evF = logregFeatures(keyed.filter(pmod(col("src"), lit(5)) === 0))
-      .persist(MemOnly)
+    val trF = graft.TransientCaches.persist(
+      logregFeatures(keyed.filter(pmod(col("src"), lit(5)) =!= 0)), MemOnly)
+    val evF = graft.TransientCaches.persist(
+      logregFeatures(keyed.filter(pmod(col("src"), lit(5)) === 0)), MemOnly)
     // all rates fitted in the same GD-step jobs, and all rates' held-out
     // accuracies in ONE eval pass (r15 — each was a separate job chain)
     val fitted = logregFitStepsMulti(trF, rates.sorted).map {
@@ -1262,8 +1245,8 @@ object Classify {
       val ok = ev.getLong(i + 1)
       (rate, w(0), w(1), w(2), w(3), nEval, ok, ok * 1000000L / nEval)
     }
-    trF.unpersist()
-    evF.unpersist()
+    graft.TransientCaches.unpersist(trF)
+    graft.TransientCaches.unpersist(evF)
     rows.toDF("rate", "w0", "w1", "w2", "w3", "n_eval", "n_correct",
       "accuracy_ppm").orderBy("rate")
   }

@@ -52,12 +52,11 @@ object Colloc {
     // this frame — without the persist the corpus window pass runs
     // twice (the q163 lesson). Bigram-TYPE-sized (observed vocab
     // pairs), far below corpus scale.
-    val bigc = graft.TransientCaches.register(
+    val bigc = graft.TransientCaches.persist(
       tokens
         .select(col("term").as("x"), lead("term", 1).over(byDoc).as("y"))
         .filter(col("y").isNotNull)
-        .groupBy("x", "y").agg(count(lit(1)).as("n_xy"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .groupBy("x", "y").agg(count(lit(1)).as("n_xy")))
     val nBig = bigc.agg(sum("n_xy").as("n_big"))
     bigc
       .filter(col("n_xy") >= minCount)

@@ -532,15 +532,13 @@ object CorpusOps {
   def sourceOverlap(docs: DataFrame, n: Int): DataFrame = {
     val gramExpr =
       (0 until n).map(j => s"toks[i + $j]").mkString("concat_ws(' ', ", ", ", ")")
-    val grams = docs
+    val grams = graft.TransientCaches.persist(docs
       .select(col("source"), TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("source"), explode(expr(
         s"CASE WHEN size(toks) >= $n THEN " +
           s"transform(sequence(0, size(toks) - $n), i -> $gramExpr) " +
           "ELSE array() END")).as("gram"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(grams)
+      .distinct())
     val sizes = grams.groupBy("source").agg(count(lit(1)).as("sz"))
     val pairs = sizes.select(col("source").as("src_a"), col("sz").as("sza"))
       .join(sizes.select(col("source").as("src_b"), col("sz").as("szb")),
@@ -644,9 +642,7 @@ object CorpusOps {
   def vocabCoverage(tokens: DataFrame, ks: Seq[Int]): DataFrame = {
     val spark = tokens.sparkSession
     import spark.implicits._
-    val counts = tokens.groupBy("term").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(counts)
+    val counts = graft.TransientCaches.persist(tokens.groupBy("term").agg(count(lit(1)).as("c")))
     val tot = counts.agg(sum("c").cast(LongType).as("total"),
       count(lit(1)).as("vocab"))
     val perK = ks.map { k =>

@@ -215,17 +215,16 @@ object Curation {
     // ONE windowed pass supplies every consumer: lead(1) and lead(2)
     // share the same partitioning+sort, so Catalyst runs a single
     // Window operator; the persisted frame is then read by the word
-    // count and both gram aggregations (unpersisted via
-    // TransientCaches like the Fuzzy variants frame — without it each
-    // of the three subtrees would re-shuffle and re-sort the full
-    // token table). Corpus-sized at (doc_id, 3 terms) width;
+    // count and both gram aggregations (pinned through TransientCaches
+    // and freed by its release, like the Fuzzy variants frame —
+    // without it each of the three subtrees would re-shuffle and
+    // re-sort the full token table). Corpus-sized at (doc_id, 3 terms) width;
     // MEMORY_AND_DISK spills rather than OOMs at scale.
-    val leads = graft.TransientCaches.register(
+    val leads = graft.TransientCaches.persist(
       tokens
         .select(col("doc_id"), col("term"),
           lead("term", 1).over(byDoc).as("t1"),
-          lead("term", 2).over(byDoc).as("t2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          lead("term", 2).over(byDoc).as("t2")))
     val nWords = leads.groupBy("doc_id").agg(count(lit(1)).as("n_words"))
     val top2 = leads.filter(col("t1").isNotNull)
       .groupBy(col("doc_id"), concat_ws(" ", col("term"), col("t1")).as("g"))
@@ -262,13 +261,12 @@ object Curation {
     val parts = col("term") +: (1 until n).map(i => lead("term", i).over(byDoc))
     // persisted: the eval and train sides both read this frame — without
     // it each subtree re-runs the scan + window sort (the q163 lesson);
-    // TransientCaches-registered, MEMORY_AND_DISK spills at scale.
-    val grams = graft.TransientCaches.register(
+    // pinned through TransientCaches, MEMORY_AND_DISK spills at scale.
+    val grams = graft.TransientCaches.persist(
       tokens
         .select(col("doc_id"), concat_ws(" ", parts: _*).as("g"),
           lead("term", n - 1).over(byDoc).isNotNull.as("full"))
-        .filter(col("full"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(col("full")))
     val evalGrams = grams.filter(col("doc_id") % evalMod === 0)
       .select(col("doc_id"), col("g")).distinct()
     val trainGrams = grams.filter(col("doc_id") % evalMod =!= 0)
@@ -307,12 +305,11 @@ object Curation {
     val parts = col("term") +: (1 until n).map(i => lead("term", i).over(byDoc))
     // persisted: read by the dup-gram count AND the membership join —
     // without it the scan + window sort run twice (the q163 lesson).
-    val withGram = graft.TransientCaches.register(
+    val withGram = graft.TransientCaches.persist(
       tokens
         .select(col("doc_id"), col("pos"), col("term"),
           concat_ws(" ", parts: _*).as("g"),
-          lead("term", n - 1).over(byDoc).isNotNull.as("full"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          lead("term", n - 1).over(byDoc).isNotNull.as("full")))
     val dupGrams = withGram.filter(col("full"))
       .groupBy("g").agg(count(lit(1)).as("c"))
       .filter(col("c") > 1)

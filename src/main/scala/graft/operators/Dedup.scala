@@ -187,11 +187,9 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, num: Int = 4, den: Int = 5): DataFrame = {
     val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val sh = docsWithExcerpts(docs)
+    val sh = graft.TransientCaches.persist(docsWithExcerpts(docs)
       .select(col("doc_id"), shingles(col("text")).as("shingles"))
-      .repartition(par, col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(sh)
+      .repartition(par, col("doc_id")))
     val ex = sh.select(col("doc_id"), explode(col("shingles")).as("g"))
     val cand = ex.as("a")
       .join(ex.as("b"),
@@ -222,12 +220,10 @@ object Dedup {
     */
   def sourceModularity(docs: DataFrame): DataFrame = {
     val srcs = docs.select(col("doc_id"), col("source"))
-    val e = nearDupPairs(docs)
+    val e = graft.TransientCaches.persist(nearDupPairs(docs)
       .join(srcs.select(col("doc_id").as("doc_a"), col("source").as("sa")), "doc_a")
       .join(srcs.select(col("doc_id").as("doc_b"), col("source").as("sb")), "doc_b")
-      .select(col("sa"), col("sb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    graft.TransientCaches.register(e)
+      .select(col("sa"), col("sb")), org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     val m = e.agg(count(lit(1)).as("m"))
     val intra = e.filter(col("sa") === col("sb"))
       .groupBy(col("sa").as("source")).agg(count(lit(1)).as("ie"))
@@ -255,8 +251,8 @@ object Dedup {
     // 32 longs) — far smaller than the corpus — and MEMORY_AND_DISK
     // spills per-partition rather than failing.
     val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val sigs = minhashSignatures(docs.repartition(par, col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = graft.TransientCaches.persist(
+      minhashSignatures(docs.repartition(par, col("doc_id"))))
     val bands = bandSignatures(sigs)
     val cand = bands.as("x")
       .join(bands.as("y"), col("x.band_sig") === col("y.band_sig") &&
@@ -292,9 +288,10 @@ object Dedup {
     // semantically-equal plan from cache on every later run, turning
     // repeated bench runs into cache hits; localCheckpoint makes a
     // fresh RDD per call, so each run pays the honest pipeline cost.
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    sigs.unpersist()
+    val out = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(pre),
+      org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    graft.TransientCaches.unpersist(sigs)
     out
   }
 
@@ -374,8 +371,8 @@ object Dedup {
   /** Signatures of the docs in one batch, spread across the cluster. */
   private def batchSignatures(docs: DataFrame, pred: Column,
       par: Int): DataFrame =
-    minhashSignatures(docs.filter(pred).repartition(par, col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.TransientCaches.persist(
+      minhashSignatures(docs.filter(pred).repartition(par, col("doc_id"))))
 
   /** Incremental near-dup detection (q185): the INDEX-PROBE form of
     * q20 that a growing corpus actually runs — historical docs'
@@ -396,9 +393,10 @@ object Dedup {
     val pre = probeIndexRuns(spark, newSigs, Seq(idx), num, den)
       .orderBy("new_doc", "hist_doc")
     // localCheckpoint materialization, MEMORY_ONLY — see nearDupPairs
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    newSigs.unpersist()
+    val out = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(pre),
+      org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    graft.TransientCaches.unpersist(newSigs)
     out
   }
 
@@ -415,22 +413,10 @@ object Dedup {
     graft.sources.Staging.ensureStaged(idx) {
       val hist = batchSignatures(docs, col("doc_id") % 5 =!= 0, par)
       writeIndexRun(hist, idx, par)
-      hist.unpersist()
+      graft.TransientCaches.unpersist(hist)
       graft.sources.Staging.touch(idx)
     }
     idx
-  }
-
-  /** Measurement support (tools.FoldFlatness): build one sorted index
-    * run from an arbitrary docs frame — the staged-base build step
-    * surfaced so the flatness harness can stage histories of chosen
-    * sizes outside its timed region.
-    */
-  def buildIndexRun(docs: DataFrame, runDir: String): Unit = {
-    val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val sigs = batchSignatures(docs, lit(true), par)
-    writeIndexRun(sigs, runDir, par)
-    sigs.unpersist()
   }
 
   /** q188's per-micro-batch body: probe an ARRIVING docs frame
@@ -470,7 +456,7 @@ object Dedup {
     graft.sources.Staging.ensureStaged(s"$idx/base") {
       val hist = batchSignatures(docs, batchNo(col("doc_id")) === 0, par)
       writeIndexRun(hist, s"$idx/base", par)
-      hist.unpersist()
+      graft.TransientCaches.unpersist(hist)
       graft.sources.Staging.touch(s"$idx/base")
     }
     val increments = (1 to 2).map { b =>
@@ -481,13 +467,14 @@ object Dedup {
           col("inter"), col("uni"))
       // materialize THIS increment's pairs before the fold-in below
       // mutates the delta the next run of this query will overwrite
-      val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      val out = graft.TransientCaches.localCheckpoint(
+        graft.metrics.RuntimeBreakdown.noteExecuted(pre),
+        org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       // the FOLD-IN: one delta run per increment, deterministic and
       // idempotent (overwrite), re-paid per call so bench cost stays
       // honest
       writeIndexRun(batch, s"$idx/delta$b", par)
-      batch.unpersist()
+      graft.TransientCaches.unpersist(batch)
       out
     }
     increments.reduce(_ unionAll _).orderBy("batch", "new_doc", "hist_doc")
@@ -513,14 +500,14 @@ object Dedup {
     graft.sources.Staging.ensureStaged(s"$idx/base") {
       val hist = batchSignatures(docs, batchNo(col("doc_id")) === 0, par)
       writeIndexRun(hist, s"$idx/base", par)
-      hist.unpersist()
+      graft.TransientCaches.unpersist(hist)
       graft.sources.Staging.touch(s"$idx/base")
     }
     // delta1 rewritten deterministically (idempotent) so this entry is
     // self-contained whether or not q187 ran first in this JVM
     val b1 = batchSignatures(docs, batchNo(col("doc_id")) === 1, par)
     writeIndexRun(b1, s"$idx/delta1", par)
-    b1.unpersist()
+    graft.TransientCaches.unpersist(b1)
     // COMPACT: merge the two runs into one, restoring the single
     // range-sorted layout (a full shuffle-sort of the INDEX, not the
     // corpus — bands+shingles are far smaller than the documents)
@@ -539,9 +526,10 @@ object Dedup {
     val b2 = batchSignatures(docs, batchNo(col("doc_id")) === 2, par)
     val pre = probeIndexRuns(spark, b2, Seq(compacted), num, den)
       .orderBy("new_doc", "hist_doc")
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    b2.unpersist()
+    val out = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(pre),
+      org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    graft.TransientCaches.unpersist(b2)
     out
   }
 
@@ -596,9 +584,10 @@ object Dedup {
     val newSigs = batchSignatures(docs, col("doc_id") % 5 === 0, par)
     val pre = probeIndexRuns(spark, newSigs, Seq(s"$tdir/purged"), num, den)
       .orderBy("new_doc", "hist_doc")
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    newSigs.unpersist()
+    val out = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(pre),
+      org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    graft.TransientCaches.unpersist(newSigs)
     out
   }
 
@@ -713,15 +702,13 @@ object Dedup {
         .map(id => (id, find(id)))
         .toDF("doc_id", "group_id")
     }
-    val edges = pairs
+    val edges = graft.TransientCaches.persist(pairs
       .unionAll(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("src", "dst"))
     // `cached` is the frame actually pinned each round; `labels` is
     // its (id, label) view — unpersist must target the pinned plan
-    var cached = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var cached = graft.TransientCaches.persist(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var labels = cached
     cached.count() // materialize so each round reads the cache, not lineage
     var converged = false
@@ -734,12 +721,11 @@ object Dedup {
         .agg(min("label").as("nl"))
       // carry the previous label through the round so convergence is
       // read off the same materialized frame — one join per round
-      val stepped = labels.join(neighborMin, Seq("id"), "left")
+      val stepped = graft.TransientCaches.persist(labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          least(col("label"), coalesce(col("nl"), col("label"))).as("label")))
       val changed = stepped.filter(col("label") =!= col("old")).count() // materializes
-      cached.unpersist()
+      graft.TransientCaches.unpersist(cached)
       cached = stepped
       labels = stepped.select("id", "label")
       converged = changed == 0
@@ -753,10 +739,11 @@ object Dedup {
       .orderBy("doc_id")
     // MEMORY_ONLY: clustered-docs-only frame (see nearDupPairs — same
     // keep-disk-out-of-the-timed-region rationale)
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    cached.unpersist()
-    edges.unpersist()
+    val out = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(pre),
+      org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    graft.TransientCaches.unpersist(cached)
+    graft.TransientCaches.unpersist(edges)
     out
   }
 
@@ -779,13 +766,11 @@ object Dedup {
       simhashNearDup(docsWithSimhash(t), maxHamming = 3)
         .select("doc_a", "doc_b"))
       .withColumnRenamed("group_id", "l2")
-    val lab = docs
+    val lab = graft.TransientCaches.persist(docs
       .join(g1, Seq("doc_id"), "left_outer")
       .join(g2, Seq("doc_id"), "left_outer")
       .select(coalesce(col("l1"), col("doc_id")).as("l1"),
-        coalesce(col("l2"), col("doc_id")).as("l2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(lab)
+        coalesce(col("l2"), col("doc_id")).as("l2")))
     def c2(c: Column): Column = ((c * (c - 1)) / 2).cast(LongType)
     val i2 = lab.groupBy("l1", "l2").agg(count(lit(1)).as("c"))
       .agg(sum(c2(col("c"))).as("pairs_both"))
@@ -1682,10 +1667,9 @@ object Dedup {
   def crossCorpusNearDup(corpus: DataFrame, probes: DataFrame,
       num: Int = 4, den: Int = 5): DataFrame = {
     val par = corpus.sparkSession.sessionState.conf.numShufflePartitions
-    val sigC = minhashSignatures(corpus.repartition(par, col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigP = minhashSignatures(probes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigC = graft.TransientCaches.persist(
+      minhashSignatures(corpus.repartition(par, col("doc_id"))))
+    val sigP = graft.TransientCaches.persist(minhashSignatures(probes))
     val cand = bandSignatures(sigP).as("p")
       .join(bandSignatures(sigC).as("c"),
         col("p.band_sig") === col("c.band_sig") &&
@@ -1705,10 +1689,11 @@ object Dedup {
       .orderBy("eval_id", "train_id")
     // MEMORY_ONLY: verified cross-corpus pair set, LSH-filtered small
     // (see nearDupPairs — same disk-free-timed-region rationale)
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    sigC.unpersist()
-    sigP.unpersist()
+    val out = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(pre),
+      org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    graft.TransientCaches.unpersist(sigC)
+    graft.TransientCaches.unpersist(sigP)
     out
   }
 

@@ -502,7 +502,7 @@ object Eval {
          |ORDER BY rater""".stripMargin,
     ) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val preds = decorated(Tables(s, dir).documentsRebalanced)
+      val preds = graft.TransientCaches.persist(decorated(Tables(s, dir).documentsRebalanced)
         .select(col("doc_id"), explode(array(
           struct(lit(1).as("rater"),
             TextAnalysis.langPredicted(col("text")).as("cat")),
@@ -510,9 +510,7 @@ object Eval {
             TextAnalysis.langPredictedStops(col("text")).as("cat")),
           struct(lit(3).as("rater"),
             TextAnalysis.langPredictedMarkers(col("text")).as("cat")))).as("p"))
-        .select(col("doc_id"), col("p.rater").as("rater"), col("p.cat").as("cat"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(preds)
+        .select(col("doc_id"), col("p.rater").as("rater"), col("p.cat").as("cat")))
       val cnt = preds.groupBy("doc_id", "cat").agg(count(lit(1)).as("c"))
       val wMaj = Window.partitionBy("doc_id")
         .orderBy(col("c").desc, col("cat").asc)

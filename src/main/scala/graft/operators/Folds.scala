@@ -32,12 +32,11 @@ object Folds {
   def strataRanks(docs: DataFrame, stratum: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val keyed = docs.select(col(stratum).as("st"), col("doc_id"),
-        md5(concat(lit("fold"), col("doc_id").cast(StringType)).cast(BinaryType))
-          .as("sk"))
-      .withColumn("bkt", substring(col("sk"), 1, 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(keyed)
+    val keyed = graft.TransientCaches.persist(
+      docs.select(col(stratum).as("st"), col("doc_id"),
+          md5(concat(lit("fold"), col("doc_id").cast(StringType)).cast(BinaryType))
+            .as("sk"))
+        .withColumn("bkt", substring(col("sk"), 1, 1)))
     // model-sized: ≤|strata|×16 rows — per-(stratum, hex-bucket) offsets
     val counts = keyed.groupBy("st", "bkt").agg(count(lit(1)).as("c"))
       .orderBy("st", "bkt").collect()

@@ -37,16 +37,15 @@ object Fuzzy {
     // persisted: both sides of the self-join read this frame — without
     // the persist each side re-runs the distinct + variant explode.
     // Size is (distinct keys)·(len+1) — entity-key scale, not corpus
-    // scale; MEMORY_AND_DISK spills rather than OOMs. Registered with
+    // scale; MEMORY_AND_DISK spills rather than OOMs. Pinned through
     // TransientCaches: the returned frame is lazy, so the unpersist
     // belongs to the caller — TransientCaches.release() after
-    // materializing (the bench's per-query sweep does it automatically).
-    val variants = graft.TransientCaches.register(
+    // materializing (the bench loop releases after every query).
+    val variants = graft.TransientCaches.persist(
       keys.select(col("k"), explode(array_distinct(concat(
         array(col("k")),
         expr("transform(sequence(1, length(k)), i -> " +
-          "concat(substring(k, 1, i - 1), substring(k, i + 1)))")))).as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          "concat(substring(k, 1, i - 1), substring(k, i + 1)))")))).as("v")))
     variants.as("a").join(variants.as("b"), col("a.v") === col("b.v"))
       .filter(col("a.k") < col("b.k"))
       // verify BEFORE dedup: the one-edit check runs join-local, while

@@ -88,23 +88,9 @@ object Ivf {
   private val centroidCache =
     scala.collection.concurrent.TrieMap.empty[(String, Int, Int), IndexedSeq[Array[Float]]]
 
-  /** The inverted lists themselves — the clustered corpus,
-    * materialized once per (session, plan, model): this IS the IVF
-    * index, and re-assigning every vector on every search would
-    * misrepresent the operator's query-time cost exactly like
-    * refitting would. Keyed by SESSION too (unlike the quantizer memo,
-    * whose values are plain arrays): a cached DataFrame is bound to
-    * the session that persisted it, and plan hashes collide across
-    * sessions. Entries of stopped sessions are evicted on access.
-    */
-  private val listsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), DataFrame]
-
-  def invalidateIndex(blocking: Boolean = false): Unit = {
+  def invalidateIndex(): Unit = {
     centroidCache.clear()
-    listsCache.values.foreach(df =>
-      try df.unpersist(blocking) catch { case _: Throwable => () })
-    listsCache.clear()
+    graft.TransientCaches.forget("ivf")
     // staged-index in-JVM memos too (the staged FILES stay — they are
     // the index; fingerprint-keyed paths make them stale-proof)
     stagedCentroidCache.clear()
@@ -166,33 +152,16 @@ object Ivf {
   def annSearch(emb: DataFrame, probes: DataFrame, nprobe: Int, k: Int,
       nClusters: Int = 16, iters: Int = 3): DataFrame = {
     val cents = fittedCentroids(emb, nClusters, iters)
-    val key = (emb.sparkSession,
-      emb.queryExecution.analyzed.semanticHash().toString, nClusters, iters)
-    def drop(k: (org.apache.spark.sql.SparkSession, String, Int, Int)): Unit =
-      listsCache.remove(k).foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
-    listsCache.keys.filter(_._1.sparkContext.isStopped).foreach(drop)
-    // bound, don't flush: evict ONE stranger past the cap (the
-    // centroidCache policy)
-    if (listsCache.size > 64) listsCache.keys.find(_ != key).foreach(drop)
-    // build under a lock — TrieMap.getOrElseUpdate may run the builder
-    // twice concurrently, and the loser would stay persisted forever
-    val corpus = listsCache.get(key).getOrElse(listsCache.synchronized {
-      listsCache.get(key).getOrElse {
-        val c = withCluster(emb, cents)
-          .select(col("vec_id"), col("embedding"), col("cluster"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count() // materialize the index eagerly
-        listsCache.put(key, c)
-        c
-      }
-    })
-    // NOTE an external RDD-level unpersist of the materialized blocks is
-    // NOT detectable here (Dataset.storageLevel reports the requested
-    // level, not live block state) — callers that free pinned storage
-    // behind the engine's back must call invalidateIndex() so the memo
-    // is rebuilt instead of silently recomputing per search. The bench
-    // loop does exactly that between queries.
+    // The inverted lists themselves — the clustered corpus,
+    // materialized once per (session, plan, model): this IS the IVF
+    // index, and re-assigning every vector on every search would
+    // misrepresent the operator's query-time cost exactly like
+    // refitting would. A release that frees them drops the memo, so the
+    // next search rebuilds.
+    val corpus = graft.TransientCaches.memo(emb.sparkSession, "ivf",
+        (emb.queryExecution.analyzed.semanticHash(), nClusters, iters)) {
+      withCluster(emb, cents).select(col("vec_id"), col("embedding"), col("cluster"))
+    }
     searchLists(corpus, cents, probes, nprobe, k)
   }
 
@@ -936,15 +905,15 @@ object Ivf {
       iters: Int = 3): DataFrame = {
     val emb = Tables(spark, dir).embeddings
     val (cents, lists) = historyAnnIndex(spark, dir, iters)
-    val pinned = lists
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val pinned = graft.TransientCaches.persist(
+      lists, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     val nBefore = pinned.count()
     val nTomb = pinned.filter(col("hist_vec") % 7 === 0).count()
-    val purged = pinned.filter(col("hist_vec") % 7 =!= 0)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val purged = graft.TransientCaches.localCheckpoint(
+      pinned.filter(col("hist_vec") % 7 =!= 0), org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     require(nTomb > 0 && purged.count() == nBefore - nTomb,
       s"ANN purge drift: $nBefore entries, $nTomb tombstoned")
-    pinned.unpersist()
+    graft.TransientCaches.unpersist(pinned)
     probeAnnLists(emb.filter(col("vec_id") % 5 === 0), cents, purged,
         threshold, nAssign)
       .orderBy("new_vec", "hist_vec")

@@ -355,9 +355,8 @@ object Kmv {
       // span them and the shingle explode + 32 MINs re-ran per side
       // (r15; the q275 multi-consumer persist lesson). Doc × 32 longs:
       // bounded per doc at any corpus scale.
-      val sigs = graft.TransientCaches.register(
-        ex.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val sigs = graft.TransientCaches.persist(
+        ex.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*))
       // staged τ ≥ 1/2 pair set (shared with q261; r11 VERDICT item 2)
       // — the entry's own work is the 32-permutation b-bit comparison
       val pairs = SetJoin.jaccardPairsStaged(s, dir, num = 1, den = 2)

@@ -191,11 +191,9 @@ object Knn {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val b = emb.filter(pmod(col("label"), lit(2)) === 1)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    val scored = a.crossJoin(b)
+    val scored = graft.TransientCaches.persist(a.crossJoin(b)
       .select(col("qid"), col("cid"),
-        round(GraftFunctions.cosineF32(col("qv"), col("cv")), 6).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(scored)
+        round(GraftFunctions.cosineF32(col("qv"), col("cv")), 6).as("s")))
     def top4Sum(nn: Column): Column =
       ((nn(0).getField("score") + nn(1).getField("score")) +
         nn(2).getField("score")) + nn(3).getField("score")

@@ -58,13 +58,9 @@ object Lm {
     * bigram has finite log-probability.
     */
   def knHeldOut(docs: DataFrame): DataFrame = {
-    val bg = bigramsWithSplit(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(bg)
-    val c12 = bg.filter(col("is_train"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(c12)
+    val bg = graft.TransientCaches.persist(bigramsWithSplit(docs))
+    val c12 = graft.TransientCaches.persist(bg.filter(col("is_train"))
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val ctx = c12.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n1f"))
     val bwd = c12.groupBy("w2").agg(count(lit(1)).as("n1b"))
@@ -169,12 +165,11 @@ object Lm {
     // model-fit + scoring join chain (measured: nine ~10 s stages all
     // re-reading the same 2.8 MB exchange at sf0.1). One doc-sized
     // persist (|docs| rows) collapses them to a single pass.
-    val scored = graft.TransientCaches.register(per
+    val scored = graft.TransientCaches.persist(per
       .select(col("doc_id"),
         round(col("avg_logprob") * Grid, 0).cast(LongType).as("si"),
         round(col("avg_logprob"), 7).cast(D7).as("a7"))
-      .join(src, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .join(src, "doc_id"))
     val hist = scored.groupBy("si").agg(count(lit(1)).as("cnt"))
     // cumulative over the GRID histogram (bounded frame — class doc)
     val cum = hist.withColumn("cum", sum("cnt").over(Window.orderBy("si")))
@@ -301,23 +296,17 @@ object Lm {
       shiftrightunsigned(
         GraftFunctions.splitmix64(col("doc_id") + lit(777L)), 54).as("z2"))
     .filter(size(col("t")) >= 2)
-  val bg = tok
+  val bg = graft.TransientCaches.persist(tok
     .select(col("doc_id"), col("is_train"), col("z2"), col("t"),
       explode(sequence(lit(1), size(col("t")) - 1)).as("i"))
     .select(col("doc_id"), col("is_train"), col("z2"),
       element_at(col("t"), col("i")).as("w1"),
-      element_at(col("t"), col("i") + 1).as("w2"))
-    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  graft.TransientCaches.register(bg)
-  val ep = bg.filter(!col("is_train"))
-    .groupBy("w1", "w2").agg(count(lit(1)).as("ce"))
-    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  graft.TransientCaches.register(ep)
+      element_at(col("t"), col("i") + 1).as("w2")))
+  val ep = graft.TransientCaches.persist(bg.filter(!col("is_train"))
+    .groupBy("w1", "w2").agg(count(lit(1)).as("ce")))
   val parts = Seq(25 -> 256L, 50 -> 512L, 100 -> 1024L).map { case (p, z) =>
-    val c = bg.filter(col("is_train") && col("z2") < z)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(c)
+    val c = graft.TransientCaches.persist(bg.filter(col("is_train") && col("z2") < z)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val x = c.groupBy("w1").agg(sum("c12").cast(LongType).as("c1"))
     val v = c.select(col("w1")).union(c.select(col("w2")))
       .distinct().agg(count(lit(1)).as("v"))
@@ -546,15 +535,13 @@ object Lm {
          |FROM px, (SELECT unnest([25, 50, 75]) AS alpha_pct)
          |GROUP BY alpha_pct ORDER BY alpha_pct""".stripMargin,
     ) { (s, dir) =>
-      val bg = bigramsWithSplit(Tables(s, dir).documentsRebalanced)
-        .withColumn("grp_a", substring(col("source"), 4, 8).cast("int") < 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(bg)
+      val bg = graft.TransientCaches.persist(
+        bigramsWithSplit(Tables(s, dir).documentsRebalanced)
+          .withColumn("grp_a", substring(col("source"), 4, 8).cast("int") < 10))
       def model(a: Boolean): (DataFrame, DataFrame, DataFrame) = {
         val f = bg.filter(col("is_train") && (if (a) col("grp_a") else !col("grp_a")))
-        val c = f.groupBy("w1", "w2").agg(count(lit(1)).as(s"c12${if (a) "a" else "b"}"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.TransientCaches.register(c)
+        val c = graft.TransientCaches.persist(
+          f.groupBy("w1", "w2").agg(count(lit(1)).as(s"c12${if (a) "a" else "b"}")))
         val x = c.groupBy("w1")
           .agg(sum(s"c12${if (a) "a" else "b"}").cast(LongType)
             .as(s"c1${if (a) "a" else "b"}"))
@@ -1062,24 +1049,19 @@ object Lm {
         .groupBy(md5(col("text")).as("h"))
         .agg(min("k").as("k")).select("k")
         .withColumn("keep", lit(true))
-      val bg = tok
+      val bg = graft.TransientCaches.persist(tok
         .join(surv, Seq("k"), "left")
         .select(col("k"), col("is_train"),
           coalesce(col("keep"), lit(false)).as("keep"), col("t"),
           explode(sequence(lit(1), size(col("t")) - 1)).as("i"))
         .select(col("k"), col("is_train"), col("keep"),
           element_at(col("t"), col("i")).as("w1"),
-          element_at(col("t"), col("i") + 1).as("w2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(bg)
-      val ep = bg.filter(!col("is_train"))
-        .groupBy("w1", "w2").agg(count(lit(1)).as("ce"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(ep)
+          element_at(col("t"), col("i") + 1).as("w2")))
+      val ep = graft.TransientCaches.persist(bg.filter(!col("is_train"))
+        .groupBy("w1", "w2").agg(count(lit(1)).as("ce")))
       def fitScore(train: DataFrame, tag: String): DataFrame = {
-        val c = train.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.TransientCaches.register(c)
+        val c = graft.TransientCaches.persist(
+          train.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
         val x = c.groupBy("w1").agg(sum("c12").cast(LongType).as("c1"))
         val v = c.select(col("w1")).union(c.select(col("w2")))
           .distinct().agg(count(lit(1)).as("v"))
@@ -1190,19 +1172,14 @@ object Lm {
          |       ROUND(CAST(a AS DOUBLE) / CAST(wsum AS DOUBLE), 6) AS weight
          |FROM ex, ws ORDER BY source""".stripMargin,
     ) { (s, dir) =>
-      val bg = bigramsWithSplit(Tables(s, dir).documentsRebalanced)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(bg)
+      val bg = graft.TransientCaches.persist(bigramsWithSplit(Tables(s, dir).documentsRebalanced))
       val tr = bg.filter(col("is_train"))
-      val cr = tr.groupBy("w1", "w2").agg(count(lit(1)).as("c12r"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(cr)
+      val cr = graft.TransientCaches.persist(tr.groupBy("w1", "w2").agg(count(lit(1)).as("c12r")))
       val xr = cr.groupBy("w1").agg(sum("c12r").cast(LongType).as("c1r"))
       val vr = cr.select(col("w1")).union(cr.select(col("w2")))
         .distinct().agg(count(lit(1)).as("vr"))
-      val cd = tr.groupBy("source", "w1", "w2").agg(count(lit(1)).as("c12d"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(cd)
+      val cd = graft.TransientCaches.persist(
+        tr.groupBy("source", "w1", "w2").agg(count(lit(1)).as("c12d")))
       val xd = cd.groupBy("source", "w1")
         .agg(sum("c12d").cast(LongType).as("c1d"))
       val vd = cd.select(col("source"), col("w1"))
@@ -1235,12 +1212,11 @@ object Lm {
       // whole 5-way scoring join ran twice (measured: every heavy
       // stage duplicated at sf0.1). One sources-sized persist halves
       // the query.
-      val ex = graft.TransientCaches.register(
+      val ex = graft.TransientCaches.persist(
         per.select(col("source"), col("n_held_bigrams"),
           round(col("cp"), 6).as("ce_pooled"), round(col("co"), 6).as("ce_own"),
           excess.as("excess"),
-          round(exp(excess), 6).cast(D6).as("a"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          round(exp(excess), 6).cast(D6).as("a")))
       val ws = ex.agg(sum("a").as("wsum"))
       ex.crossJoin(broadcast(ws))
         .select(col("source"), col("n_held_bigrams"), col("ce_pooled"),

@@ -459,7 +459,7 @@ object Multimodal {
       // sequence(0, (len-1) div 64) would emit one empty block for a
       // zero-length text ((-1) div 64 = 0) while DuckDB's
       // range(0, ceil-div) emits none — a cross-engine divergence.
-      val blocks = Tables(s, dir).documentsRebalanced
+      val blocks = graft.TransientCaches.persist(Tables(s, dir).documentsRebalanced
         .select(col("doc_id"), col("source"),
           hex(col("text").cast(BinaryType)).as("h"))
         .filter(length(col("h")) > 0)
@@ -467,9 +467,7 @@ object Multimodal {
           explode(expr("sequence(0, (length(h) - 1) div 64)")).as("p"),
           col("h"))
         .select(col("doc_id"), col("source"),
-          expr("substr(h, p * 64 + 1, 64)").as("blk"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(blocks)
+          expr("substr(h, p * 64 + 1, 64)").as("blk")))
       val per = blocks.groupBy("source", "blk")
         .agg(count(lit(1)).as("occ"), countDistinct("doc_id").as("nd"))
       val srcdocs = blocks.groupBy("source")
@@ -625,13 +623,11 @@ object Multimodal {
     ) { (s, dir) =>
       import s.implicits._
       val cosF = graft.functions.GraftFunctions.cosineF32 _
-      val img = featuresThroughSeam(
+      val img = graft.TransientCaches.persist(featuresThroughSeam(
         mediaTable(s, dir).select(col("doc_id"), col("payload")).as[MediaRow],
         PoolCodec).toDF()
         .filter(col("n_bytes") >= 4)
-        .select(col("doc_id"), col("features").as("iv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(img)
+        .select(col("doc_id"), col("features").as("iv")))
       val src = Tables(s, dir).documents.select("doc_id", "source")
       val emb = Tables(s, dir).embeddings
       val anch = emb.select(col("vec_id").as("i"),

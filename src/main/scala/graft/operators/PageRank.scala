@@ -108,7 +108,8 @@ object PageRank {
       iters: Int, nodeCount: Long,
       edgeLocalLimit: Long = LiteralCarryLimit): DataFrame = {
     val spark = edges.sparkSession
-    val e = graft.metrics.RuntimeBreakdown.noteExecuted(edges).localCheckpoint(true)
+    val e = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(edges))
     val base = (1.0 - damping) / nodeCount
     val nodeType = nodes.schema("node").dataType
     // model-sized: ≤n_nodes rows — the rank-vector key set (call sites
@@ -164,7 +165,8 @@ object PageRank {
   private[graft] def distributedLoop(edges: DataFrame, nodes: DataFrame,
       damping: Double, iters: Int, nodeCount: Long,
       forceShuffle: Boolean = false): DataFrame = {
-    val e = graft.metrics.RuntimeBreakdown.noteExecuted(edges).localCheckpoint(true)
+    val e = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(edges))
     val base = (1.0 - damping) / nodeCount
     val small = !forceShuffle && nodeCount <= BroadcastNodeLimit
     // forceShuffle (q300's certification mode, the q180 forced-CC
@@ -175,7 +177,7 @@ object PageRank {
     def rankHint(df: DataFrame) = if (forceShuffle) df.hint("shuffle_hash") else df
     var ranks = nodes.select(col("node"), lit(1.0 / nodeCount).as("pr"))
     for (_ <- 1 to iters) {
-      val pinned = ranks.localCheckpoint(true)
+      val pinned = graft.TransientCaches.localCheckpoint(ranks)
       val rankSide = if (small) broadcast(pinned) else rankHint(pinned)
       val contrib = e.join(rankSide, col("src") === col("node"))
         .select(col("dst"), (col("pr") * col("frac")).cast(DecimalType(38, 18)).as("c"))
@@ -256,9 +258,9 @@ object PageRank {
     */
   def kHop(edges: DataFrame, source: Long, iters: Int,
       edgeLocalLimit: Long = LiteralCarryLimit): DataFrame = {
-    val e = graft.metrics.RuntimeBreakdown.noteExecuted(
+    val e = graft.TransientCaches.localCheckpoint(graft.metrics.RuntimeBreakdown.noteExecuted(
       edges.select(col("src").cast(LongType).as("src"),
-        col("dst").cast(LongType).as("dst"))).localCheckpoint(true)
+        col("dst").cast(LongType).as("dst"))))
     // Model-sized graph (≤ edgeLocalLimit edges): BFS is driver math
     // over the collected adjacency — burning one Spark job per hop on
     // a ≤2²⁰-row frame buys nothing (the q93 literal-carry argument;
@@ -277,16 +279,15 @@ object PageRank {
       import e.sparkSession.implicits._
       dist.toSeq.toDF("node", "hops")
     } else {
-      var dist = e.sparkSession.range(1)
-        .select(lit(source).as("node"), lit(0).as("hops")).localCheckpoint(true)
+      var dist = graft.TransientCaches.localCheckpoint(e.sparkSession.range(1)
+        .select(lit(source).as("node"), lit(0).as("hops")))
       var frontier = dist
       for (k <- 1 to iters) {
         val next = frontier.join(e, col("node") === col("src"))
           .select(col("dst").as("node"), lit(k).as("hops"))
           .groupBy("node").agg(min("hops").as("hops"))
-        val grown = dist.unionByName(next)
-          .groupBy("node").agg(min("hops").as("hops"))
-          .localCheckpoint(true)
+        val grown = graft.TransientCaches.localCheckpoint(dist.unionByName(next)
+          .groupBy("node").agg(min("hops").as("hops")))
         frontier = grown.join(dist.select(col("node").as("seen")),
           col("node") === col("seen"), "left_anti")
         dist = grown
@@ -373,62 +374,53 @@ object PageRank {
     val MemOnly = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
     // The report is a driver-built |ks|-row frame with NO lineage on
     // the loop's checkpointed intermediates, so every block this call
-    // pins is freed before returning (snapshot-diff of persistent
-    // RDDs, the ScaleStress idiom) — without this, repeated bench runs
-    // accumulate per-round checkpoint RDDs until a 128 GiB heap
+    // pins is freed before returning — without this, repeated bench
+    // runs accumulate per-round checkpoint RDDs until a 128 GiB heap
     // finally GCs, and the pile-up inflated the first x10 reading 3x
     // over its lone-JVM cost.
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet
-    // Two exact shortcuts vs the oracle's full 10-level unroll (both
-    // legal because the k-core is UNIQUE): (1) early exit — each round
-    // only removes edges, so an unchanged edge COUNT means an
-    // unchanged edge SET and every later peel level is a no-op;
-    // (2) ascending-k seeding — the k-core of G equals the k-core of
-    // any k′-core for k′ ≤ k, so k=3 peels the (much smaller)
-    // converged 2-core, not the raw pair frame.
-    var seed = edges0.localCheckpoint(true, MemOnly)
-    var seedEdges = seed.count()
-    val out = ks.sorted.map { k =>
-      var edges = seed
-      var nNodes = 0L
-      var nEdges = seedEdges
-      var converged = false
-      var r = 1
-      while (r <= maxRounds && !converged) {
-        val surv = graft.TransientCaches.register(
-          edges.select(col("doc_a").as("v"))
-            .union(edges.select(col("doc_b").as("v")))
-            .groupBy("v").agg(count(lit(1)).as("d"))
-            .filter(col("d") >= k).select("v")
-            .persist(MemOnly))
-        val next = edges.join(surv.select(col("v").as("doc_a")), "doc_a")
-          .join(surv.select(col("v").as("doc_b")), "doc_b")
-          .select("doc_a", "doc_b")
-          .localCheckpoint(true, MemOnly)
-        val t0 = System.nanoTime()
-        val ne = next.count()
-        if (ne == nEdges) { converged = true; nNodes = surv.count() }
-        if (sys.env.contains("SPARK_GRAFT_KCORE_DEBUG"))
-          println(f"kcore k=$k round=$r ne=$ne ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        nEdges = ne
-        surv.unpersist()
-        edges = next // prior round's checkpointed RDD becomes
-        // unreachable here; the ContextCleaner reclaims its blocks
-        r += 1
+    val out = graft.TransientCaches.releasing {
+      // Two exact shortcuts vs the oracle's full 10-level unroll (both
+      // legal because the k-core is UNIQUE): (1) early exit — each round
+      // only removes edges, so an unchanged edge COUNT means an
+      // unchanged edge SET and every later peel level is a no-op;
+      // (2) ascending-k seeding — the k-core of G equals the k-core of
+      // any k′-core for k′ ≤ k, so k=3 peels the (much smaller)
+      // converged 2-core, not the raw pair frame.
+      var seed = graft.TransientCaches.localCheckpoint(edges0, MemOnly)
+      var seedEdges = seed.count()
+      ks.sorted.map { k =>
+        var edges = seed
+        var nNodes = 0L
+        var nEdges = seedEdges
+        var converged = false
+        var r = 1
+        while (r <= maxRounds && !converged) {
+          val surv = graft.TransientCaches.persist(
+            edges.select(col("doc_a").as("v"))
+              .union(edges.select(col("doc_b").as("v")))
+              .groupBy("v").agg(count(lit(1)).as("d"))
+              .filter(col("d") >= k).select("v"), MemOnly)
+          val next = graft.TransientCaches.localCheckpoint(
+            edges.join(surv.select(col("v").as("doc_a")), "doc_a")
+              .join(surv.select(col("v").as("doc_b")), "doc_b")
+              .select("doc_a", "doc_b"), MemOnly)
+          val ne = next.count()
+          if (ne == nEdges) { converged = true; nNodes = surv.count() }
+          nEdges = ne
+          graft.TransientCaches.unpersist(surv)
+          edges = next // prior round's checkpointed RDD becomes
+          // unreachable here; the ContextCleaner reclaims its blocks
+          r += 1
+        }
+        require(converged,
+          s"k-core(k=$k) did not converge within $maxRounds peel rounds — " +
+            "raise the round count in BOTH the engine and the oracle")
+        seed = edges
+        seedEdges = nEdges
+        (k, nNodes, nEdges)
       }
-      require(converged,
-        s"k-core(k=$k) did not converge within $maxRounds peel rounds — " +
-          "raise the round count in BOTH the engine and the oracle")
-      seed = edges
-      seedEdges = nEdges
-      (k, nNodes, nEdges)
     }
-    val result = out.toDF("k", "n_core_nodes", "n_core_edges")
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
-    }
-    result
+    out.toDF("k", "n_core_nodes", "n_core_edges")
   }
 
   val LpaIters = 3
@@ -696,10 +688,11 @@ object PageRank {
   def labelPropagation(edges: DataFrame, nodes: DataFrame,
       iters: Int, pinEvery: Int = 4): DataFrame = {
     val dir0 = edges.filter(col("src") =!= col("dst"))
-    val und = dir0.select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(dir0.select(col("dst").as("a"), col("src").as("b")))
-      .distinct()
-      .localCheckpoint(true) // pinned once; reused every round
+    // pinned once; reused every round
+    val und = graft.TransientCaches.localCheckpoint(
+      dir0.select(col("src").as("a"), col("dst").as("b"))
+        .unionAll(dir0.select(col("dst").as("a"), col("src").as("b")))
+        .distinct())
     var lab = nodes.select(col("node"), col("node").as("label"))
     // few shallow rounds ⇒ ONE lazy plan, no per-round pin: the q93
     // lineage lesson is about deep loops re-planning exponentially;
@@ -720,7 +713,7 @@ object PageRank {
       lab = lab
         .join(best, Seq("node"), "left")
         .select(col("node"), coalesce(col("nl"), col("label")).as("label"))
-      if (k % pinEvery == 0) lab = lab.localCheckpoint(true)
+      if (k % pinEvery == 0) lab = graft.TransientCaches.localCheckpoint(lab)
     }
     lab
   }

@@ -117,44 +117,23 @@ object Pq {
           codeFor(slice(col("embedding"), m * SubDim + 1, SubDim), books(m))): _*)
           .as("codes"))
 
-  /** The encoded corpus IS the PQ index — materialized once per
-    * (session, plan, model) and searched many times, the
-    * `Ivf.listsCache` policy (re-encoding on every search would
-    * misrepresent the operator's query-time cost).
-    */
-  private val encCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int), DataFrame]
-
-  def invalidateIndex(blocking: Boolean = false): Unit = {
+  def invalidateIndex(): Unit = {
     bookCache.clear()
-    encCache.values.foreach(df =>
-      try df.unpersist(blocking) catch { case _: Throwable => () })
-    encCache.clear()
+    graft.TransientCaches.forget("pq")
     stagedBookCache.clear()
   }
 
+  /** The encoded corpus IS the PQ index — materialized once per
+    * (session, plan, model) and searched many times, the
+    * `Ivf.annSearch` inverted-lists policy (re-encoding on every search
+    * would misrepresent the operator's query-time cost).
+    */
   private def encodedCached(emb: DataFrame, coarse: IndexedSeq[Array[Float]],
-      books: IndexedSeq[IndexedSeq[Array[Double]]], iters: Int): DataFrame = {
-    val key = (emb.sparkSession,
-      emb.queryExecution.analyzed.semanticHash().toString, iters)
-    def drop(k: (org.apache.spark.sql.SparkSession, String, Int)): Unit =
-      encCache.remove(k).foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
-    encCache.keys.filter(_._1.sparkContext.isStopped).foreach(drop)
-    if (encCache.size > 64) encCache.keys.find(_ != key).foreach(drop)
-    // see the invalidateIndex note in Ivf.annSearch: external RDD-level
-    // unpersists are undetectable here; callers freeing pinned storage
-    // must invalidate the memo (the bench loop does, between queries)
-    encCache.get(key).getOrElse(encCache.synchronized {
-      encCache.get(key).getOrElse {
-        val built = encoded(emb, coarse, books)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        built.count()
-        encCache.put(key, built)
-        built
-      }
-    })
-  }
+      books: IndexedSeq[IndexedSeq[Array[Double]]], iters: Int): DataFrame =
+    graft.TransientCaches.memo(emb.sparkSession, "pq",
+        (emb.queryExecution.analyzed.semanticHash(), iters)) {
+      encoded(emb, coarse, books)
+    }
 
   /** The shared ADC query plan over an encoded corpus (vec_id, cluster,
     * codes) — memo-backed ([[annSearchPq]]) or parquet-backed

@@ -241,10 +241,9 @@ object Router {
       // phase 1: order-respecting range partitions + pid pin (see the
       // entry comment for why the pin is load-bearing)
       val parts = s.sparkContext.defaultParallelism
-      val ranged = withCap
+      val ranged = graft.TransientCaches.localCheckpoint(withCap
         .repartitionByRange(parts, col("expert"), col("gate").desc, col("vec_id"))
-        .withColumn("pid", spark_partition_id())
-        .localCheckpoint(true)
+        .withColumn("pid", spark_partition_id()))
       // per-(pid, expert) counts: P×E rows — parallelism-sized, never
       // data-sized; the offset merge is a triangular self-join on it
       val counts = ranged.groupBy("pid", "expert")

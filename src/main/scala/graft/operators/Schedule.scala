@@ -37,7 +37,8 @@ object Schedule {
   private val Rounds = 3
 
   def epochSchedule(docs: DataFrame): DataFrame = {
-    val per = docs
+    // |sources| rows; flat plans for the rounds
+    val per = graft.TransientCaches.localCheckpoint(docs
       .select(col("source"),
         size(TextAnalysis.tokens(col("text"))).cast(LongType).as("nt"),
         round(TextAnalysis.qualityScore(
@@ -47,11 +48,10 @@ object Schedule {
       .agg(sum("nt").as("t"), sum("si").as("w"))
       .select(col("source"), col("t"),
         (col("w") * (pmod(GraftFunctions.md5Long(
-          col("source").cast(BinaryType)), lit(5L)) + 1)).as("we"))
-      .localCheckpoint(true) // |sources| rows; flat plans for the rounds
+          col("source").cast(BinaryType)), lit(5L)) + 1)).as("we")))
     val scal = per.agg((sum("t") * 3).cast(LongType).as("b"))
-    val c0 = per.select(col("source"), col("t"), col("we"), lit(false).as("c"))
-      .localCheckpoint(true)
+    val c0 = graft.TransientCaches.localCheckpoint(
+      per.select(col("source"), col("t"), col("we"), lit(false).as("c")))
     def caps(p: DataFrame): DataFrame =
       p.agg(sum(when(col("c"), col("t")).otherwise(0L)).cast(LongType).as("capt"),
         sum(when(!col("c"), col("we")).otherwise(0L)).cast(LongType).as("wu"))
@@ -59,10 +59,10 @@ object Schedule {
       (col("b") - lit(R) * col("capt")).cast(DoubleType) * col("we") /
         col("wu") / col("t")
     val cFinal = (1 to Rounds).foldLeft(c0) { (p, _) =>
-      p.crossJoin(broadcast(caps(p))).crossJoin(broadcast(scal))
-        .select(col("source"), col("t"), col("we"),
-          (col("c") || eExpr >= R.toDouble).as("c"))
-        .localCheckpoint(true)
+      graft.TransientCaches.localCheckpoint(
+        p.crossJoin(broadcast(caps(p))).crossJoin(broadcast(scal))
+          .select(col("source"), col("t"), col("we"),
+            (col("c") || eExpr >= R.toDouble).as("c")))
     }
     cFinal.crossJoin(broadcast(caps(cFinal))).crossJoin(broadcast(scal))
       .select(col("source"), col("t").as("n_tokens"), col("we").as("weight"),

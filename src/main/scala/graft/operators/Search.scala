@@ -182,13 +182,12 @@ object Search {
     // filter into the shared aggregate, so without sharing the token
     // frame would aggregate twice (the q87 lesson). The count frame is
     // persisted MEMORY_AND_DISK (spills, never OOMs) and is strictly
-    // smaller than the token stream it replaces; registered with
+    // smaller than the token stream it replaces; pinned through
     // TransientCaches — release() after materializing frees the blocks
-    // without waiting for driver GC.
-    val counts = graft.TransientCaches.register(pairs
+    // (the bench loop releases after every query).
+    val counts = graft.TransientCaches.persist(pairs
       .select(col("doc_id"), col("term").as("t"))
-      .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .groupBy("doc_id", "t").agg(count(lit(1)).as("c")))
     val dl = counts.groupBy("doc_id").agg(sum("c").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"), avg("dl").as("avgdl"))
     val tf = counts.filter(col("t").isInCollection(terms))
@@ -215,13 +214,12 @@ object Search {
     * token table, is PUSHED to the parquet scan), so the positional
     * stream entering the joins is bounded by the terms' postings, not
     * the corpus; persisted because every term's side of the join reads
-    * it (the q87/q98 tokenize-once lesson), registered for release.
+    * it (the q87/q98 tokenize-once lesson), pinned for release.
     */
   private def positionalHits(pos: DataFrame, terms: Seq[String]): DataFrame =
-    graft.TransientCaches.register(pos
+    graft.TransientCaches.persist(pos
       .select(col("doc_id"), col("pos"), col("term").as("t"))
-      .filter(col("t").isInCollection(terms.distinct))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .filter(col("t").isInCollection(terms.distinct)))
 
   /** N-term phrase search: documents containing `terms` as ADJACENT
     * tokens (in order), with per-document occurrence counts — the
@@ -711,10 +709,9 @@ object Search {
     import spark.implicits._
     val toks = graft.sources.TokenizedCorpus.tokens(spark, dir)
     val allTerms = ndcgQueries.flatMap(_._2).distinct
-    val counts = graft.TransientCaches.register(toks
+    val counts = graft.TransientCaches.persist(toks
       .select(col("doc_id"), col("term").as("t"))
-      .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .groupBy("doc_id", "t").agg(count(lit(1)).as("c")))
     val dl = counts.groupBy("doc_id").agg(sum("c").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"), avg("dl").as("avgdl"))
     val tf = counts.filter(col("t").isInCollection(allTerms))
@@ -722,7 +719,7 @@ object Search {
     val df = tf.groupBy("t").agg(count(lit(1)).as("df"))
     val qterms = ndcgQueries.flatMap { case (q, ts) => ts.map((q, _)) }
       .toDF("qid", "t")
-    val scored = graft.TransientCaches.register(tf
+    val scored = graft.TransientCaches.persist(tf
       .join(broadcast(qterms), "t")
       .join(broadcast(df), "t")
       .join(dl, "doc_id")
@@ -740,8 +737,7 @@ object Search {
       .groupBy("qid", "doc_id")
       .agg(sum(round(col("contrib"), 7).cast(DecimalType(18, 7))).as("sdec"),
         count(lit(1)).cast(IntegerType).as("rel"))
-      .withColumn("score", col("sdec").cast(DoubleType))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumn("score", col("sdec").cast(DoubleType)))
     def top10(by: Column): DataFrame = scored.groupBy("qid")
       .agg(graft.functions.GraftFunctions.topkScoreId(by, col("doc_id"), 10).as("top"))
       .select(col("qid"), posexplode(col("top")))

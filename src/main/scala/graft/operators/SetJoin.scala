@@ -56,12 +56,10 @@ object SetJoin {
     */
   def jaccardSelfJoin(docs: DataFrame, num: Int, den: Int): DataFrame = {
     // the set frame feeds the prefix pass AND both verify joins — one
-    // tokenize+rank pass instead of three. Registered in
-    // TransientCaches (returned frame is lazy; release degrades to
-    // recompute, never to wrong results).
-    val sets = graft.TransientCaches.register(
-      raritySortedSets(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // tokenize+rank pass instead of three. Pinned through
+    // TransientCaches (returned frame is lazy; release after
+    // materializing — the bench loop releases after every query).
+    val sets = graft.TransientCaches.persist(raritySortedSets(docs))
     // prefix length for tau = num/den: l - ceil(tau*l) + 1, in integer
     // arithmetic: ceil(num*l/den) = floor((num*l + den - 1)/den)
     val prefixLen = (col("len") - floor((lit(num) * col("len") + den - 1) / den) + 1)
@@ -136,9 +134,8 @@ object SetJoin {
   def thresholdSweep(docs: DataFrame,
       taus: Seq[(Int, Int)]): DataFrame =
     taus.map { case (num, den) =>
-      val p = jaccardSelfJoin(docs, num, den).select("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(p)
+      val p = graft.TransientCaches.persist(
+        jaccardSelfJoin(docs, num, den).select("doc_a", "doc_b"))
       val np = p.agg(count(lit(1)).as("n_pairs"))
       val nd = p.select(col("doc_a").as("d"))
         .union(p.select(col("doc_b").as("d")))

@@ -640,9 +640,8 @@ object Similarity {
       .select("q_id", "vec_id")
     // exact MaxSim top-k once, pinned (k·|probes| rows), reused by
     // every sweep point's overlap join
-    val exact = maxSimOverCandidates(emb, allCand, k)
-      .select("q_id", "vec_id")
-      .localCheckpoint(true)
+    val exact = graft.TransientCaches.localCheckpoint(maxSimOverCandidates(emb, allCand, k)
+      .select("q_id", "vec_id"))
     // rank-tagged candidates at max probe depth, scored once
     val cents = Ivf.stagedCentroids(spark, dir)
     val candR = broadcast(
@@ -653,9 +652,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         (col("cpos") + 1).cast(IntegerType).as("crank"))
-    val scoredAll = graft.TransientCaches.register(
-      maxSimScoredPairs(emb, candR)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val scoredAll = graft.TransientCaches.persist(
+      maxSimScoredPairs(emb, candR))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
     nprobes.map { np =>
@@ -761,11 +759,9 @@ object Similarity {
       dir: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables(spark, dir).embeddings
-    val corpus = emb
+    val corpus = graft.TransientCaches.persist(emb
       .select(col("vec_id"), col("embedding"),
-        lshBucketCol(MultiprobePlanes).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(corpus)
+        lshBucketCol(MultiprobePlanes).as("bucket")))
     val total = emb.count() // model-sized scalar: corpus row count
     val probes = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
@@ -774,14 +770,14 @@ object Similarity {
     // exact top-k: broadcast probes × one corpus scan, per-probe rank
     val w = Window.partitionBy("q_id")
       .orderBy(col("score").desc, col("vec_id"))
-    val exact = corpus.crossJoin(broadcast(probes))
+    // k·|probes| rows, reused by both blocks
+    val exact = graft.TransientCaches.localCheckpoint(corpus.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(GraftFunctions.cosineF32(col("qe"), col("embedding")), 6)
           .as("score"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k).select("q_id", "vec_id")
-      .localCheckpoint(true) // k·|probes| rows, reused by both blocks
+      .filter(col("rank") <= k).select("q_id", "vec_id"))
     // probe-bucket masks at depth m: identity, every 1-bit flip, every
     // 2-bit flip — all distinct values, so no candidate dedup is needed
     // (each corpus vector has exactly one bucket)
@@ -799,14 +795,12 @@ object Similarity {
         else probes.select(col("q_id"), col("qe"),
           explode(array(masks(m).map(mask =>
             col("qb").bitwiseXOR(lit(mask))): _*)).as("pb"))
-      val cand = broadcast(pbs)
+      val cand = graft.TransientCaches.persist(broadcast(pbs)
         .join(corpus, col("pb") === col("bucket"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
           round(GraftFunctions.cosineF32(col("qe"), col("embedding")), 6)
-            .as("score"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.TransientCaches.register(cand)
+            .as("score")))
       val nc = cand.agg(count(lit(1)).as("nc"))
       val ov = cand.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k).select("q_id", "vec_id")

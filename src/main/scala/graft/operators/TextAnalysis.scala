@@ -234,13 +234,12 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     import spark.implicits._
-    val keyed = docs
+    val keyed = graft.TransientCaches.persist(docs
       .select(col("doc_id"),
         md5(concat(lit("shuf"), col("doc_id").cast(StringType)).cast(BinaryType))
           .as("sk"),
         size(tokens(col("text"))).cast(LongType).as("n_tok"))
-      .withColumn("bkt", substring(col("sk"), 1, 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bkt", substring(col("sk"), 1, 1)))
     // model-sized: ≤16 rows — one per hex-prefix bucket
     val totals = keyed.groupBy("bkt").agg(sum("n_tok").as("t"))
       .orderBy("bkt").collect().map(r => (r.getString(0), r.getLong(1)))
@@ -254,8 +253,9 @@ object TextAnalysis {
       .withColumn("pack_id", expr(s"(cum - n_tok) div $budget"))
       .select("doc_id", "n_tok", "pack_id")
     if (!materialize) return pre // plan-inspection path (spec); keyed stays cached
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre).localCheckpoint(true)
-    keyed.unpersist()
+    val out = graft.TransientCaches.localCheckpoint(
+      graft.metrics.RuntimeBreakdown.noteExecuted(pre))
+    graft.TransientCaches.unpersist(keyed)
     out
   }
 

@@ -196,15 +196,14 @@ object Tpch3 {
           .join(broadcast(t.nation.filter(col("n_regionkey") === 2)),
             col("s_nationkey") === col("n_nationkey"))
           .select(col("s_suppkey")))
-      val v = derivedPartsupp(t)
+      // |part|-bounded rollup consumed TWICE (scalar total + the
+      // threshold filter): pinned so the lineitem pair rollup runs
+      // once, not once per consumer — measured 2x at the x10 blowup
+      val v = graft.TransientCaches.localCheckpoint(derivedPartsupp(t)
         .join(asiaSupp, col("ps_suppkey") === col("s_suppkey"))
         .groupBy("ps_partkey")
         .agg(sum(col("ps_supplycost") *
-          col("ps_availqty").cast(DecimalType(10, 0))).as("val"))
-        // |part|-bounded rollup consumed TWICE (scalar total + the
-        // threshold filter): pinned so the lineitem pair rollup runs
-        // once, not once per consumer — measured 2x at the x10 blowup
-        .localCheckpoint(true)
+          col("ps_availqty").cast(DecimalType(10, 0))).as("val")))
       val tot = v.agg(sum("val").as("t"), count(lit(1)).as("c"))
       v.crossJoin(broadcast(tot))
         .filter(col("val").cast(DoubleType) * col("c") >

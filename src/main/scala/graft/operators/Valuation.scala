@@ -74,61 +74,51 @@ object Valuation {
     */
   def bradleyTerry(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet
-    val m = matches(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(m)
-    val wins = m.select(col("i").as("s"), col("wi").as("w"), col("n"))
-      .union(m.select(col("j"), col("n") - col("wi"), col("n")))
-      .groupBy("s")
-      .agg(sum("w").cast(LongType).as("wins"),
-        sum("n").cast(LongType).as("games"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(wins)
-    // each round references the previous p (and its own praw) more
-    // than once — EAGER localCheckpoint per round keeps the plan flat
-    // (the q261 3^r-growth lesson); frames are |sources|-sized.
-    val p0 = wins.select(col("s"), lit(1.0).cast(D7).as("p"))
-      .localCheckpoint(true)
-    val pFinal = (1 to MmIters).foldLeft(p0) { (p, _) =>
-      val pi = p.select(col("s").as("i"), col("p").as("pi"))
-      val pj = p.select(col("s").as("j"), col("p").as("pj"))
-      val t = m.join(pi, "i").join(pj, "j")
-        .select(col("i"), col("j"),
-          round(col("n").cast(DoubleType)
-            / (col("pi") + col("pj")).cast(DoubleType), 7).cast(D7).as("term"))
-      val den = t.select(col("i").as("s"), col("term"))
-        .union(t.select(col("j"), col("term")))
-        .groupBy("s").agg(sum("term").as("den"))
-      val praw = wins.join(den, "s")
-        .select(col("s"), round(col("wins").cast(DoubleType)
-          / col("den").cast(DoubleType), 7).cast(D7).as("praw"))
-        .localCheckpoint(true)
-      val tot = praw.agg(sum("praw").as("tot"), count(lit(1)).as("kk"))
-      praw.crossJoin(broadcast(tot))
-        .select(col("s"),
-          round(col("praw").cast(DoubleType) * col("kk")
-            / col("tot").cast(DoubleType), 7).cast(D7).as("p"))
-        .localCheckpoint(true)
-    }
     // materialize the |sources|-row report, then free every block this
     // operator pinned (persists + eager checkpoints) — the q261/q269
     // leak lesson: lingering checkpoint blocks inflate later readings.
-    val out = wins.join(pFinal, "s")
-      .select(col("s").as("source"), col("games"), col("wins"),
-        col("p").cast(DoubleType).as("strength"))
-      .orderBy("source")
-    // model-sized: ≤20 rows — one per source; the collect exists only to
-    // cut lineage onto a checkpoint-free frame before freeing the pinned
-    // RDDs. Never copy this pattern to a data-scale frame.
-    val rows = out.collect().toSeq
-    val materialized = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), out.schema)
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
+    val (rows, schema) = graft.TransientCaches.releasing {
+      val m = graft.TransientCaches.persist(matches(docs))
+      val wins = graft.TransientCaches.persist(
+        m.select(col("i").as("s"), col("wi").as("w"), col("n"))
+          .union(m.select(col("j"), col("n") - col("wi"), col("n")))
+          .groupBy("s")
+          .agg(sum("w").cast(LongType).as("wins"),
+            sum("n").cast(LongType).as("games")))
+      // each round references the previous p (and its own praw) more
+      // than once — EAGER localCheckpoint per round keeps the plan flat
+      // (the q261 3^r-growth lesson); frames are |sources|-sized.
+      val p0 = graft.TransientCaches.localCheckpoint(
+        wins.select(col("s"), lit(1.0).cast(D7).as("p")))
+      val pFinal = (1 to MmIters).foldLeft(p0) { (p, _) =>
+        val pi = p.select(col("s").as("i"), col("p").as("pi"))
+        val pj = p.select(col("s").as("j"), col("p").as("pj"))
+        val t = m.join(pi, "i").join(pj, "j")
+          .select(col("i"), col("j"),
+            round(col("n").cast(DoubleType)
+              / (col("pi") + col("pj")).cast(DoubleType), 7).cast(D7).as("term"))
+        val den = t.select(col("i").as("s"), col("term"))
+          .union(t.select(col("j"), col("term")))
+          .groupBy("s").agg(sum("term").as("den"))
+        val praw = graft.TransientCaches.localCheckpoint(wins.join(den, "s")
+          .select(col("s"), round(col("wins").cast(DoubleType)
+            / col("den").cast(DoubleType), 7).cast(D7).as("praw")))
+        val tot = praw.agg(sum("praw").as("tot"), count(lit(1)).as("kk"))
+        graft.TransientCaches.localCheckpoint(praw.crossJoin(broadcast(tot))
+          .select(col("s"),
+            round(col("praw").cast(DoubleType) * col("kk")
+              / col("tot").cast(DoubleType), 7).cast(D7).as("p")))
+      }
+      val out = wins.join(pFinal, "s")
+        .select(col("s").as("source"), col("games"), col("wins"),
+          col("p").cast(DoubleType).as("strength"))
+        .orderBy("source")
+      // model-sized: ≤20 rows — one per source; the collect exists only
+      // to cut lineage onto a checkpoint-free frame before freeing the
+      // pinned RDDs. Never copy this pattern to a data-scale frame.
+      (out.collect().toSeq, out.schema)
     }
-    materialized
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
   private val btSql: String = {

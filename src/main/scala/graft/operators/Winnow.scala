@@ -118,12 +118,10 @@ object Winnow {
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
     // the bigram frame feeds three consumers (scoring join + both
     // model counts) — persist it once (the q134/q149/q158 lesson)
-    val bg = tokens
+    val bg = graft.TransientCaches.persist(tokens
       .select(col("doc_id"), col("term").as("w1"),
         lead("term", 1).over(byDoc).as("w2"))
-      .filter(col("w2").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(bg)
+      .filter(col("w2").isNotNull))
     val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val ctx = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     val vocab = tokens.select("term").distinct()
@@ -855,9 +853,8 @@ object Winnow {
   def splitLeakage(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val pairs = graft.TransientCaches.register(
-      SetJoin.jaccardSelfJoin(docs, 4, 5).select("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pairs = graft.TransientCaches.persist(
+      SetJoin.jaccardSelfJoin(docs, 4, 5).select("doc_a", "doc_b"))
     val tot = pairs.agg(count(lit(1)).as("tp"))
     val dg = docs.select(col("doc_id"), md5(col("text")).as("h"))
     val gm = dg.groupBy("h").agg(min("doc_id").as("gmin"))

@@ -29,13 +29,11 @@ object StreamingDocs {
     // the static side of a stream-static join is re-evaluated EVERY
     // micro-batch unless pinned — persist the (small, per-deployment
     // static) eval gram frame once (measured 5.1→1.7 s over 4 batches)
-    val evalGrams = graft.operators.Winnow
+    val evalGrams = graft.TransientCaches.persist(graft.operators.Winnow
       .wordGramHashes(
         graft.Tables(spark, dir).documents.filter(col("doc_id") % 97 === 0),
         n = 5)
-      .select("gh").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(evalGrams)
+      .select("gh").distinct())
     evalGrams.count()
     val train = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -229,9 +227,7 @@ object StreamingDocs {
     val feed = stagedVecsFeed(spark, dir)
     val schema = spark.read.parquet(feed).schema
     val (cents, lists0) = graft.operators.Ivf.historyAnnIndex(spark, dir)
-    val lists = lists0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.TransientCaches.register(lists)
+    val lists = graft.TransientCaches.persist(lists0)
     lists.count()
     val outDir = s"${graft.sources.Staging.stagingRoot()}/graft_ingest_ann/" +
       s"run_${java.util.UUID.randomUUID().toString.take(8)}"

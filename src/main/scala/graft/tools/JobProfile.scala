@@ -78,19 +78,10 @@ object JobProfile {
             f"sw=${r.shufWriteB / 1024}%5d KiB  ${r.name.take(50)}")
         }
       }
-      operators.cleanupAfter(spark)
-    }
-    spark.stop()
-  }
-
-  /** Shared post-query cleanup mirroring Bench.measure's hygiene. */
-  private object operators {
-    def cleanupAfter(spark: org.apache.spark.sql.SparkSession): Unit = {
-      graft.operators.Ivf.invalidateIndex(blocking = true)
-      graft.operators.Pq.invalidateIndex(blocking = true)
+      // post-query cleanup mirroring Bench.measure's hygiene
       graft.TransientCaches.release(blocking = true)
-      spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(true))
       org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
     }
+    spark.stop()
   }
 }

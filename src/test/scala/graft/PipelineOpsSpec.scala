@@ -254,6 +254,15 @@ class PipelineOpsSpec extends SparkSpec {
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate") && !plan.contains("Window"),
       plan.take(2000))
+    // the rebalance fan-out is size-derived: one task per 32 KiB of
+    // source parquet, clamped to [1, shuffle partitions]
+    val bytes = Tables(spark, sf).documents.queryExecution.optimizedPlan.stats.sizeInBytes
+    val want = (bytes / 32768).max(1).min(spark.sessionState.conf.numShufflePartitions)
+    val fanOut = docs.queryExecution.logical match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+        r.numPartitions
+    }
+    assert(BigInt(fanOut) == want, s"fan-out $fanOut for $bytes bytes")
   }
 
   test("topk_score_str ties break by UTF-8 order and survive partial merges") {
