@@ -17,18 +17,18 @@ import org.apache.spark.sql.SparkSession
   * Emits exactly one JSON line:
   *   {"metric":"total_median_sec","value":N,"unit":"sec",
   *    "queries":{...},"sf":...,"n_queries":N,"failed":N,
-  *    "vs_prev":{...},"prev":"BENCH_rXX.json",
+  *    "vs_prev":{...},"prev":"BENCH_HISTORY.jsonl#N",
   *    "witness":{"qNN":{"seq":s,"iso":s},...}}
   * `queries` values stay plain seconds (the driver's contract); a
   * failed query is recorded as -1.0 there, EXCLUDED from the total,
   * and counted in `failed` so a smaller total can never silently mean
   * "a query crashed". `vs_prev` is this_run/prev_run per query against
-  * the newest complete same-sf full run in BENCH_HISTORY.jsonl (falling
-  * back to the newest BENCH_r*.json wrapper; absent when no prior round
-  * exists). `witness` makes the record self-certifying
-  * (BASELINE.md §2 protocol): the slowest queries and any >1.5x
-  * vs_prev regression are re-measured ISOLATED after the sequence —
-  * seq/iso ≈ 1 certifies the sequence number; a regression that
+  * the newest comparable same-sf run in BENCH_HISTORY.jsonl (`{}`,
+  * with no `prev` label, when no line qualifies — e.g. the first run
+  * at a new sf; see [[readHistory]]). `witness` makes the record
+  * self-certifying (BASELINE.md §2 protocol): the slowest queries and
+  * any >1.5x vs_prev regression are re-measured ISOLATED after the
+  * sequence — seq/iso ≈ 1 certifies the sequence number; a regression that
   * vanishes isolated is sequence/host noise, visible in the record
   * itself. When seq and iso THEMSELVES disagree (>1.5x either way) the
   * query is re-measured once more in a fresh child JVM and recorded as
@@ -49,31 +49,18 @@ object Bench {
     s(s.size / 2)
   }
 
-  /** Per-query seconds parsed out of one BENCH_r*.json, scoped to the
-    * text of its "queries":{...} object (flat numbers by contract),
-    * tolerant of the driver's wrapper fields and tail truncation.
+  /** A JSON number in full float syntax: a bare [0-9.eE+]+ class cannot
+    * carry a NEGATIVE exponent, so "4.9E-4" captured as "4.9E" would
+    * throw in toDouble and lose the whole run's vs_prev.
     */
-  def queryTimesFrom(f: java.io.File): Map[String, Double] =
-    try {
-      // the driver may wrap our JSON line string-escaped (and
-      // truncated) inside its own "tail" field — unescape
-      // unconditionally; a clean bench line has no \" sequences
-      queryTimesFromText(
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          .replace("\\\"", "\""))
-    } catch {
-      // a malformed prior-round file degrades to "no baseline", never
-      // to losing this run's results
-      case scala.util.control.NonFatal(_) => Map.empty
-    }
+  private val Num = "(-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?)"
 
-  /** Core of [[queryTimesFrom]] on already-unescaped record text. */
+  /** Per-query seconds in one record's text, scoped to its
+    * "queries":{...} object (flat numbers by contract).
+    */
   def queryTimesFromText(text: String): Map[String, Double] =
     try {
-      // full float syntax: a bare [0-9.eE+]+ class cannot carry a
-      // NEGATIVE exponent, so "4.9E-4" captured as "4.9E" would
-      // throw in toDouble and lose the whole run's vs_prev
-      val pair = "\"([^\"]+)\":(-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?)".r
+      val pair = ("\"([^\"]+)\":" + Num).r
       val start = text.indexOf("\"queries\":{")
       // NO whole-text fallback: a driver record whose tail truncated
       // away the queries object still contains witness fragments
@@ -92,116 +79,102 @@ object Bench {
         .filter(_.group(1).matches("q\\d+\\w*"))
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch {
-      // a malformed prior-round file degrades to "no baseline", never
-      // to losing this run's results
+      // a malformed record degrades to "no baseline", never to losing
+      // this run's results
       case scala.util.control.NonFatal(_) => Map.empty
     }
 
-  /** Per-query seconds from the newest COMPLETE prior full run.
-    *
-    * Primary source: BENCH_HISTORY.jsonl — written by the bench itself,
-    * append-only, never driver-truncated. The r10 defect this exists
-    * for: the driver's BENCH_r09.json wrapper keeps only a ~2,000-char
-    * stdout TAIL, which cut away the `"queries":{` prefix of the r9
-    * record; [[queryTimesFromText]] correctly refused the whole-text
-    * fallback, vs_prev degraded to `{}`, and the >1.5x-vs-prev witness
-    * trigger was silently disarmed — six real regressions went
-    * unadjudicated. A history line qualifies as the baseline when its
-    * recorded sf matches this run's (cross-sf ratios are meaningless)
-    * AND its query map covers at least half the current inventory
-    * (SPARK_GRAFT_ONLY partials and fresh-JVM child lines never do).
-    * Newest qualifying line wins. Falls back to the newest
-    * BENCH_r*.json wrapper only when no history line qualifies.
+  /** The sf a record was measured at: the directory NAME of its "sf"
+    * field (cross-sf ratios are meaningless), None when the field is
+    * absent.
+    */
+  private def recordSf(text: String): Option[String] =
+    "\"sf\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(text).map(m => sfName(m.group(1)))
+
+  private def sfName(sfDir: String): String = new java.io.File(sfDir).getName
+
+  /** One BENCH_HISTORY.jsonl line, parsed once: its 1-based line number
+    * (the `prev` label), sf, loaded flag ([[lineLoaded]]), per-query
+    * seconds and CPU-control seconds.
+    */
+  final case class HistoryLine(
+      number: Int,
+      sf: Option[String],
+      loaded: Boolean,
+      queries: Map[String, Double],
+      cpuControl: Option[Double])
+
+  /** BENCH_HISTORY.jsonl in `dir`, NEWEST line first: the one source of
+    * every cross-run baseline (vs_prev, total-vs-history, cpu-control).
+    * The bench writes it itself, append-only, so unlike the per-round
+    * wrapper records it is never truncated: a wrapper keeps only a
+    * ~2,000-char stdout TAIL, which cut the `"queries":{` prefix from
+    * every full-run record since r2 — the r10 defect where vs_prev
+    * degraded to `{}` and the >1.5x-vs-prev witness was silently
+    * disarmed. An absent or unreadable file is "no history".
+    */
+  def readHistory(dir: java.io.File = new java.io.File(".")): Seq[HistoryLine] =
+    try {
+      import scala.jdk.CollectionConverters._
+      val cpuRe = ("\"cpu_control\":" + Num).r
+      java.nio.file.Files.readAllLines(new java.io.File(dir, "BENCH_HISTORY.jsonl").toPath)
+        .asScala.toSeq.zipWithIndex.reverse.map { case (text, i) =>
+          HistoryLine(i + 1, recordSf(text), lineLoaded(text), queryTimesFromText(text),
+            cpuRe.findFirstMatchIn(text).map(_.group(1).toDouble))
+        }
+    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
+
+  /** A same-sf line not recorded under load. The sf field must be
+    * PRESENT and matching: a schema-drifted line with no sf field would
+    * otherwise silently supply cross-sf ratios — the same class of
+    * silent-disarm defect the history source exists to prevent.
+    * Loaded-run lines are skipped (r13 ADVICE low): a steal-inflated
+    * baseline makes this run's ratios read fast and under-arms the
+    * regression witness.
+    */
+  private def quietSameSf(l: HistoryLine, sfDir: String): Boolean =
+    !l.loaded && l.sf.contains(sfName(sfDir))
+
+  /** A line usable as a run baseline for a run of `names`: quiet and
+    * same-sf, covering at least half of `names` (SPARK_GRAFT_ONLY
+    * partials and fresh-JVM child lines never do) and of a similar run
+    * shape (see [[HistoryShapeRatio]]).
+    */
+  private def comparable(l: HistoryLine, sfDir: String, names: Set[String]): Boolean =
+    quietSameSf(l, sfDir) &&
+      l.queries.keySet.intersect(names).size >= math.max(1, names.size / 2) &&
+      l.queries.size <= HistoryShapeRatio * math.max(1, names.size)
+
+  /** Per-query seconds from the newest [[comparable]] history line, with
+    * its `BENCH_HISTORY.jsonl#N` label; `(None, empty)` when no line
+    * qualifies (e.g. the first run at a new sf).
     */
   def previousQueryTimes(
+      history: Seq[HistoryLine],
       sfDir: String,
-      currentNames: Set[String],
-      dir: java.io.File = new java.io.File(".")): (Option[String], Map[String, Double]) = {
-    val fromHistory: Option[(String, Map[String, Double])] = {
-      val hist = new java.io.File(dir, "BENCH_HISTORY.jsonl")
-      if (!hist.exists()) None
-      else
-        try {
-          val lines = java.nio.file.Files.readAllLines(hist.toPath)
-          val sfRe = "\"sf\":\\s*\"([^\"]+)\"".r
-          val wantSf = new java.io.File(sfDir).getName
-          val minCover = math.max(1, currentNames.size / 2)
-          (lines.size to 1 by -1).iterator.map { i =>
-            val text = lines.get(i - 1)
-            // the sf field must be PRESENT and matching (exists, not
-            // forall): a schema-drifted line with no sf field would
-            // otherwise silently supply cross-sf vs_prev ratios — the
-            // same class of silent-disarm defect the history source
-            // exists to prevent. Loaded-run lines are skipped too (r13
-            // ADVICE low): a steal-inflated baseline makes this run's
-            // ratios read fast and under-arms the regression witness.
-            val sfOk = !lineLoaded(text) &&
-              sfRe.findFirstMatchIn(text).map(_.group(1))
-                .exists(s => new java.io.File(s).getName == wantSf)
-            val qs = if (sfOk) queryTimesFromText(text) else Map.empty[String, Double]
-            (i, qs)
-          }.collectFirst {
-            // shape filter as in historyLines (round-14 review
-            // finding): a probe's vs_prev baselined on a full-run
-            // line reads 1.24-1.68x on a quiet host (cold-JVM share
-            // vs mid-sequence warmth) and spuriously witness-flags
-            // half the probe
-            case (i, qs) if qs.keySet.intersect(currentNames).size >= minCover &&
-                qs.size <= HistoryShapeRatio * math.max(1, currentNames.size) =>
-              (s"BENCH_HISTORY.jsonl#$i", qs)
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
+      names: Set[String]): (Option[String], Map[String, Double]) =
+    history.find(comparable(_, sfDir, names)) match {
+      case Some(l) => (Some(s"BENCH_HISTORY.jsonl#${l.number}"), l.queries)
+      case None => (None, Map.empty)
     }
-    fromHistory match {
-      case Some((label, qs)) => (Some(label), qs)
-      case None =>
-        // superseded rounds live in records/ since round 14 — scan
-        // both locations, and skip wrappers whose parse is EMPTY (the
-        // rc-124 BENCH_r13.json wrapper carries no queries map; picking
-        // it by round number would re-create the r10 silent-disarm
-        // with a non-empty label)
-        val dirFiles = Option(dir.listFiles()).getOrElse(Array.empty) ++
-          Option(new java.io.File(dir, "records").listFiles()).getOrElse(Array.empty)
-        // sort by round NUMBER — lexicographic name order misorders r9/r10
-        val benches = dirFiles.filter(_.getName.matches("BENCH_r\\d+\\.json"))
-          .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
-        benches.reverseIterator
-          .map(f => (f.getName, queryTimesFrom(f)))
-          .find(_._2.nonEmpty) match {
-          case Some((name, qs)) => (Some(name), qs)
-          case None =>
-            // keep the old degraded-to-empty contract (label of the
-            // newest wrapper, no baseline) when nothing parses
-            benches.lastOption match {
-              case None => (None, Map.empty)
-              case Some(f) => (Some(f.getName), Map.empty)
-            }
-        }
-    }
-  }
 
   /** The round-1 driver baseline (BENCH_r01.json): the fixed reference
     * every round is graded against. Its 46-query map survives intact
     * inside the driver's truncated tail, so this parse is complete.
-    * Returns empty when the baseline's sf dir differs from `sfDir` —
+    * Returns empty when the baseline's sf differs from `sfDir` —
     * cross-sf ratios (e.g. an sf0.01 iteration run vs the sf0.1
     * baseline) would be meaningless as grades and noisy as witness
     * triggers.
     */
-  def r1QueryTimes(sfDir: String): Map[String, Double] = {
-    val f = new java.io.File("BENCH_r01.json")
-    if (!f.exists()) return Map.empty
-    val sameSf =
-      try {
-        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          .replace("\\\"", "\"")
-        "\"sf\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(text)
-          .map(_.group(1))
-          .forall(r1Sf => new java.io.File(r1Sf).getName ==
-            new java.io.File(sfDir).getName)
-      } catch { case scala.util.control.NonFatal(_) => true }
-    if (sameSf) queryTimesFrom(f) else Map.empty
-  }
+  def r1QueryTimes(sfDir: String): Map[String, Double] =
+    try {
+      // the wrapper keeps our line string-escaped inside its own
+      // "tail" field; a clean bench line has no \" sequences
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("BENCH_r01.json")), "UTF-8").replace("\\\"", "\"")
+      if (recordSf(text).forall(_ == sfName(sfDir))) queryTimesFromText(text)
+      else Map.empty
+    } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** Queries witnessed isolated after the sequence (the slowest ones
     * dominate total time AND are where sequence-position noise is most
@@ -233,7 +206,7 @@ object Bench {
     * get ONE timed run — median-of-5 over a scheduling floor buys no
     * precision and cost ~70 s of the full-inventory wall clock, which
     * is what pushed the r13 bench past the driver's timeout (the
-    * committed BENCH_r13.json was rc 124 / parsed null).
+    * committed round-13 record was rc 124 / parsed null).
     */
   def timedRunsFor(name: String, default: Int): Int =
     if (isStreaming(name)) 1 else default
@@ -244,7 +217,7 @@ object Bench {
     * BENCH_SUMMARY.json before the ~290-query tail starts — a driver
     * wall-clock timeout can then truncate COVERAGE but never zero out
     * the round's graded record. Spec-pinned in EdgeCaseSpec: with the
-    * real registry and BENCH_r01.json, the full r1-shared set precedes
+    * real registry and the r1 baseline, the full r1-shared set precedes
     * inventory position 47.
     */
   def benchOrder(entries: Seq[QueryEntry], r1Names: Set[String]): Seq[QueryEntry] = {
@@ -385,7 +358,7 @@ object Bench {
     *      seq ≈ iso. A host-wide slowdown inflates the sequence and
     *      the isolated re-run TOGETHER, so seq/iso agreement is
     *      exactly the wrong evidence to close a vs-prev flag: the
-    *      committed BENCH_r11 certified q259 at 5.6× and q139 at
+    *      committed round-11 record certified q259 at 5.6× and q139 at
     *      5.8× vs r10 as `stable` off iso agreement alone, while
     *      same-session quiet-host runs showed both nominal. Only a
     *      process with no shared host-period history (a fresh child
@@ -500,21 +473,19 @@ object Bench {
       cpuVsHistory.exists(_ > LoadedTotalVsHistory)
 
   /** This run's shared-query total vs the median of the newest (up to
-    * 5) qualifying same-sf full runs in BENCH_HISTORY.jsonl — the
-    * total-vs-history loaded-host signal. Per prior line: ratio =
-    * Σ this-run seconds / Σ that-line seconds over the intersection of
-    * positive readings (inventory growth between rounds makes raw
-    * totals incomparable). Lines must cover ≥ half the current
-    * inventory (partials/fresh-child lines never do). None when no
-    * line qualifies.
+    * 5) [[comparable]] history lines — the total-vs-history loaded-host
+    * signal. Per prior line: ratio = Σ this-run seconds / Σ that-line
+    * seconds over the intersection of positive readings (inventory
+    * growth between rounds makes raw totals incomparable). None when
+    * no line qualifies.
     */
   def totalVsHistoryRatio(
-      results: Seq[(String, Double)],
+      history: Seq[HistoryLine],
       sfDir: String,
-      dir: java.io.File = new java.io.File(".")): Option[Double] = {
+      results: Seq[(String, Double)]): Option[Double] = {
     val cur = results.collect { case (k, v) if v > 0 => k -> v }.toMap
-    val ratios = historyLines(sfDir, cur.keySet, dir).flatMap { text =>
-      val qs = queryTimesFromText(text)
+    val ratios = history.filter(comparable(_, sfDir, cur.keySet)).take(5).flatMap { l =>
+      val qs = l.queries
       val shared = qs.keySet.intersect(cur.keySet)
         .filter(k => qs(k) > 0)
       if (shared.size < math.max(1, cur.size / 2)) None
@@ -544,18 +515,13 @@ object Bench {
       // 3dp-rounded, so a 0.0295-steal run that hostLoaded correctly
       // called quiet (raw < 0.03) records run_avg 0.03 — the explicit
       // tag must win or that line is retro-misclassified forever
-      "\"run_avg\":(-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?)".r
+      ("\"run_avg\":" + Num).r
         .findFirstMatchIn(text)
         .exists(_.group(1).toDouble >= LoadedStealAvg)
 
-  /** Raw text of qualifying BENCH_HISTORY lines (same sf, ≥half
-    * inventory coverage, NOT flagged loaded — see [[lineLoaded]] —
-    * and of a SIMILAR RUN SHAPE: the line's own query count is at
-    * most [[HistoryShapeRatio]]× the current run's), NEWEST first,
-    * capped at 5 — shared by the total-vs-history and
-    * cpu-control-vs-history loaded signals.
-    *
-    * The shape filter (round 14): per-query times are systematically
+  /** The run-shape filter of [[comparable]] (round 14): a history
+    * line's own query count must be at most this multiple of the
+    * current run's. Per-query times are systematically
     * context-dependent — a query inside a 341-entry full sequence
     * runs on a JVM warmed by hundreds of prior queries, while the
     * same query in a 52-entry adjudication probe pays its share of a
@@ -563,34 +529,14 @@ object Bench {
     * 0.82, zero big regressions, vs_r1 0.83) read total_vs_hist
     * 1.24–1.68 against FULL-run baselines and 0.975 against the
     * like-shaped r13 probe line — the unlike-shape comparison
-    * false-flags every quiet probe as loaded. Full-vs-full and
-    * probe-vs-probe comparisons both survive the filter; the
-    * coverage floor already prevents the reverse mismatch (a full
-    * run never baselines against a probe line).
+    * false-flags every quiet probe as loaded, and a probe's vs_prev
+    * baselined on a full-run line reads 1.24-1.68x and spuriously
+    * witness-flags half the probe. Full-vs-full and probe-vs-probe
+    * comparisons both survive the filter; the coverage floor already
+    * prevents the reverse mismatch (a full run never baselines
+    * against a probe line).
     */
   val HistoryShapeRatio = 2
-  def historyLines(sfDir: String, currentNames: Set[String],
-      dir: java.io.File): Seq[String] = {
-    val hist = new java.io.File(dir, "BENCH_HISTORY.jsonl")
-    if (!hist.exists()) return Seq.empty
-    try {
-      import scala.jdk.CollectionConverters._
-      val lines = java.nio.file.Files.readAllLines(hist.toPath).asScala.toSeq
-      val sfRe = "\"sf\":\\s*\"([^\"]+)\"".r
-      val wantSf = new java.io.File(sfDir).getName
-      val minCover = math.max(1, currentNames.size / 2)
-      lines.reverse.iterator.filter { text =>
-        !lineLoaded(text) && {
-          sfRe.findFirstMatchIn(text).map(_.group(1))
-            .exists(s => new java.io.File(s).getName == wantSf) && {
-            val qs = queryTimesFromText(text)
-            qs.keySet.intersect(currentNames).size >= minCover &&
-              qs.size <= HistoryShapeRatio * math.max(1, currentNames.size)
-          }
-        }
-      }.take(5).toSeq
-    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-  }
 
   /** Pinned single-thread CPU-control microbenchmark: a fixed
     * splitmix64 fold (data-independent, cache-resident, allocation-
@@ -625,35 +571,19 @@ object Bench {
     math.min(pass(), pass())
   }
 
-  /** Median `"cpu_control":N` across recent same-sf, non-loaded
-    * history lines. Deliberately NOT routed through [[historyLines]]
+  /** Median CPU-control seconds across the newest (up to 5) quiet
+    * same-sf history lines. Deliberately NOT [[comparable]]-filtered
     * (round-14 review finding): the CPU control is a pinned
     * single-thread microbench, independent of run shape and query
     * coverage — gating it on the total-vs-history filters would
     * discard valid baselines whenever the run shape changes (e.g. the
     * first probe at a new size) and silently disarm both the
     * cpu-vs-history loaded signal and the verdict normalizer, the
-    * exact r12 false-confirmation class. `currentNames` is kept for
-    * signature stability but unused.
+    * exact r12 false-confirmation class.
     */
-  def cpuControlHistoryMedian(sfDir: String, currentNames: Set[String],
-      dir: java.io.File = new java.io.File(".")): Option[Double] = {
-    val hist = new java.io.File(dir, "BENCH_HISTORY.jsonl")
-    if (!hist.exists()) return None
-    try {
-      import scala.jdk.CollectionConverters._
-      val lines = java.nio.file.Files.readAllLines(hist.toPath).asScala.toSeq
-      val sfRe = "\"sf\":\\s*\"([^\"]+)\"".r
-      val re = "\"cpu_control\":(-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?)".r
-      val wantSf = new java.io.File(sfDir).getName
-      val vs = lines.reverse.iterator.filter { text =>
-        !lineLoaded(text) &&
-          sfRe.findFirstMatchIn(text).map(_.group(1))
-            .exists(s => new java.io.File(s).getName == wantSf)
-      }.flatMap(t => re.findFirstMatchIn(t).map(_.group(1).toDouble))
-        .filter(_ > 0).take(5).toSeq
-      if (vs.isEmpty) None else Some(median(vs))
-    } catch { case scala.util.control.NonFatal(_) => None }
+  def cpuControlHistoryMedian(history: Seq[HistoryLine], sfDir: String): Option[Double] = {
+    val vs = history.filter(quietSameSf(_, sfDir)).flatMap(_.cpuControl).filter(_ > 0).take(5)
+    if (vs.isEmpty) None else Some(median(vs))
   }
 
   /** Measure one query in a brand-new JVM: re-exec this class with the
@@ -694,8 +624,7 @@ object Bench {
       // output (e.g. third-party JSON progress lines)
       val freshLine = out.linesIterator
         .find(_.startsWith("""{"fresh":""")).getOrElse("")
-      val re = ("\"" + java.util.regex.Pattern.quote(name) +
-        "\":(-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?)").r
+      val re = ("\"" + java.util.regex.Pattern.quote(name) + "\":" + Num).r
       re.findFirstMatchIn(freshLine).map(_.group(1).toDouble).getOrElse(-1.0)
     } catch { case scala.util.control.NonFatal(_) => -1.0 }
 
@@ -870,18 +799,19 @@ object Bench {
     // sequence-time steal, snapshotted before the witness pass reuses
     // measure() (which would overwrite entries with isolated-run steal)
     val seqSteal = stealByQuery.toMap
-    // loaded-host signals computed BEFORE this run is appended to
-    // BENCH_HISTORY (it must compare against PRIOR runs, not itself)
-    val totalVsHist = totalVsHistoryRatio(results, sfDir)
-    val cpuVsHist = cpuControlHistoryMedian(sfDir, entries.map(_.name).toSet)
-      .map(m => cpuControl / m)
+    // every cross-run baseline comes from BENCH_HISTORY, read once
+    // BEFORE this run is appended (it must compare against PRIOR runs,
+    // not itself)
+    val history = readHistory()
+    val totalVsHist = totalVsHistoryRatio(history, sfDir, results)
+    val cpuVsHist = cpuControlHistoryMedian(history, sfDir).map(m => cpuControl / m)
 
     val qs = results
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val ok = results.collect { case (_, v) if v >= 0 => v }
     val failed = results.size - ok.size
-    val (prevFile, prev) = previousQueryTimes(sfDir, entries.map(_.name).toSet)
+    val (prevFile, prev) = previousQueryTimes(history, sfDir, entries.map(_.name).toSet)
     val vsPrev = results.collect {
       case (k, v) if v >= 0 && prev.get(k).exists(_ > 0) =>
         "\"" + k + "\":" + (math.round(1000.0 * v / prev(k)) / 1000.0)
@@ -961,8 +891,8 @@ object Bench {
     }
 
     // loaded-host self-flag (r11 VERDICT item 7), computed BEFORE the
-    // full-record line so the line itself carries it — historyLines()
-    // skips flagged lines, keeping the history medians (signals 3–4)
+    // full-record line so the line itself carries it — the history
+    // baselines skip flagged lines, keeping the history medians (signals 3–4)
     // from ratcheting upward after each loaded run (r13 ADVICE low)
     val stealAvgRaw = {
       val vs = seqSteal.values

@@ -33,10 +33,10 @@ object EngineSession {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // parallelism-first (the Spark default) spreads even KB-scale
     // shuffles across the full core count; the docs recommend false +
-    // an explicit advisory size for production. Parameterized so both
-    // regimes are measurable here and settable per deployment.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-      sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
+    // an explicit advisory size for production, but false measured
+    // q139 +48% and q249 +72% here (coalescing starves CPU-bound
+    // post-shuffle stages; OPTIMIZATION_r14.md), so the default stays.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // 128 MiB splits: at 100 TB this yields ~800k scan tasks — the same
     // "morsel" granularity the reference derives from stripes

@@ -25,13 +25,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * contract style as Bench; also appended to SCALE_STRESS.json.
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_SCALE (default
-  * 10), SPARK_GRAFT_ONLY to subset queries.
+  * 10, within 2..26), SPARK_GRAFT_ONLY to subset queries.
   */
 object ScaleStress {
 
-  /** The queries worth stressing: the top of BENCH_r06_full.json by
-    * median seconds — these dominate total bench time and carry the
-    * documented complexity caveats.
+  /** The queries worth stressing: the top of the round-6 full-inventory
+    * bench record by median seconds — these dominate total bench time
+    * and carry the documented complexity caveats.
     */
   val TopQueries: Seq[String] = Seq(
     "q20_minhash_neardup",
@@ -307,7 +307,11 @@ object ScaleStress {
   }
 
   def stageBlowup(spark: SparkSession, srcDir: String, n: Int): String = {
-    require(n <= 26, s"letter-rotation salt supports at most 26 replicas, got $n")
+    // n = 1 makes the exponent ln(tN/t1)/ln(1) non-finite (invalid
+    // JSON in SCALE_STRESS.json), n = 0 stages no replica at all, and
+    // the letter-rotation salt has 26 distinct shifts
+    require(2 <= n && n <= 26,
+      s"blowup factor (SPARK_GRAFT_SCALE, or StageBlowup's second argument) must be in 2..26, got $n")
     val tag = srcDir.replaceAll("[^A-Za-z0-9.]", "_")
     // v3: per-token replica prefix + embedding sign-flip (see
     // replica()) — new path so an older staging is never reused

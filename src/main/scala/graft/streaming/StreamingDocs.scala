@@ -195,7 +195,7 @@ object StreamingDocs {
       .parquet(feed)
       .filter(col("doc_id") % 5 === 0)
     StreamingEvents.withStreamShuffle(spark,
-        StreamingEvents.streamIngestPartitions) {
+        StreamingEvents.StreamIngestPartitions) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           graft.operators.Dedup.probeDocsAgainstIndex(batch.toDF(), idx)
@@ -238,7 +238,7 @@ object StreamingDocs {
       .parquet(feed)
       .filter(col("vec_id") % 5 === 0)
     StreamingEvents.withStreamShuffle(spark,
-        StreamingEvents.streamIngestPartitions) {
+        StreamingEvents.StreamIngestPartitions) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           graft.operators.Ivf
@@ -281,7 +281,7 @@ object StreamingDocs {
       .option("maxFilesPerTrigger", "1")
       .parquet(feed)
     StreamingEvents.withStreamShuffle(spark,
-        StreamingEvents.streamIngestPartitions) {
+        StreamingEvents.StreamIngestPartitions) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           graft.operators.Classify

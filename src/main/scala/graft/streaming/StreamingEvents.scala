@@ -153,7 +153,7 @@ object StreamingEvents {
     */
   def runStreamJoinToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_ssjoin_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark, streamJoinStatePartitions) {
+    withStreamShuffle(spark, StreamJoinStatePartitions) {
       val q = streamStreamIntervalJoin(spark, dir).writeStream
         .format("memory").queryName(name)
         .outputMode("append")
@@ -227,11 +227,11 @@ object StreamingEvents {
     // single-store runners' commit machinery for the same bounded
     // state, so the join sizes its partitions to hold the per-batch
     // store-COMMIT count level with the family instead
-    // ([[streamJoinStatePartitions]] = statePartitions/4, floor 2 —
+    // ([[StreamJoinStatePartitions]] = statePartitions/4, floor 2 —
     // still multi-partition; measured at sf0.1/local[32]: q212
     // 8.56→5.83 s, q326 8.41→5.97 s isolated). Results are partition-
     // count-invariant and the oracle proves it every run.
-    withStreamShuffle(spark, streamJoinStatePartitions) {
+    withStreamShuffle(spark, StreamJoinStatePartitions) {
       withRocksDbProvider(spark, rocksDb) {
         val q = streamStreamFeedJoin(spark, dir).writeStream
           .format("memory").queryName(name)
@@ -1157,17 +1157,14 @@ object StreamingEvents {
     * partition per batch — 640 commits for a 5-batch run at 32, ≈20 s
     * of pure fixed overhead vs ≈6 s at 8). 4 still certifies
     * multi-partition distribution; a 100 TB deployment sizes this UP
-    * with its state (the knob follows the data) — parameterized via
-    * SPARK_GRAFT_STATE_PARTITIONS so the driver's low-core scaling
-    * runs and a production profile can set their own value. r15: the
-    * default dropped 8 → 4 on a family-wide A/B (73.3 → 66.7 s over
+    * with its state (the count follows the data). r15: the count
+    * dropped 8 → 4 on a family-wide A/B (73.3 → 66.7 s over
     * the 22 streaming entries; the stateful runners read 0.75–0.94×
     * — per-partition changelog/delta fsync ~100 ms/batch is the
     * dominant per-batch term at KB-scale state — while the stateless
-    * ingest runners keep [[streamIngestPartitions]]).
+    * ingest runners keep [[StreamIngestPartitions]]).
     */
-  def streamStatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "4")
+  val StreamStatePartitions = 4
 
   /** Partition count for the STATELESS foreachBatch ingest runners
     * (q188/q196/q257): they commit no state stores — their micro-batch
@@ -1179,8 +1176,7 @@ object StreamingEvents {
     * their batch compute wants the parallelism the state runners'
     * fsyncs don't).
     */
-  def streamIngestPartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_INGEST_PARTITIONS", "8")
+  val StreamIngestPartitions = 8
 
   /** Partition count for STREAM-STREAM joins (q212/q326): a join
     * commits FOUR state stores per partition per micro-batch where
@@ -1188,19 +1184,16 @@ object StreamingEvents {
     * pays 4× the family's per-batch commit machinery for the same
     * bounded state. Derived as statePartitions/4 (floored at 2 — still
     * multi-partition distribution) to hold the per-batch store-commit
-    * count level with the family; a production profile overrides via
-    * SPARK_GRAFT_JOIN_STATE_PARTITIONS, and the family knob still
-    * scales both together (the count follows state volume either way).
+    * count level with the family, so resizing the family count scales
+    * both together (the count follows state volume either way).
     * Measured at sf0.1/local[32], isolated bench: q212 8.56→5.83 s,
     * q326 8.41→5.97 s; 1 partition measured no better than 2 (the
     * commit path saturates), so the floor stays multi-partition.
     */
-  def streamJoinStatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_JOIN_STATE_PARTITIONS",
-      math.max(2, streamStatePartitions.toInt / 4).toString)
+  val StreamJoinStatePartitions: Int = math.max(2, StreamStatePartitions / 4)
 
   /** Run `body` with `spark.sql.shuffle.partitions` sized for stream
-    * state (`partitions`, default [[streamStatePartitions]]), restored
+    * state (`partitions`, default [[StreamStatePartitions]]), restored
     * even on throw. Applies to the stream AND its foreachBatch batch
     * jobs (conf-scoped around the full run). Results are
     * partition-count-invariant — state evolution is key-partitioned
@@ -1210,10 +1203,10 @@ object StreamingEvents {
     * session-global for the duration of `body`.
     */
   def withStreamShuffle[T](spark: SparkSession,
-      partitions: String = streamStatePartitions)(body: => T): T = {
+      partitions: Int = StreamStatePartitions)(body: => T): T = {
     val pkey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.getOption(pkey)
-    spark.conf.set(pkey, partitions)
+    spark.conf.set(pkey, partitions.toString)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(pkey, v)

@@ -85,12 +85,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("bench baseline parser: truncated driver tail yields NO baseline, not garbage") {
-    def parse(content: String): Map[String, Double] = {
-      val f = java.io.File.createTempFile("bench_parse", ".json")
-      f.deleteOnExit()
-      java.nio.file.Files.writeString(f.toPath, content)
-      graft.Bench.queryTimesFrom(f)
-    }
+    def parse(content: String): Map[String, Double] = graft.Bench.queryTimesFromText(content)
     // a driver record whose tail truncated away the queries object but
     // kept witness fragments: scraping those manufactured 50-70x
     // vs_prev ratios in the r9 full run — must parse to EMPTY
@@ -102,10 +97,10 @@ class EdgeCaseSpec extends SparkSpec {
       """{"metric":"x","queries":{"q01_sum":1.25,"q02_count":0.5},"sf":"y"}"""
     val m = parse(healthy)
     assert(m == Map("q01_sum" -> 1.25, "q02_count" -> 0.5))
-    // the driver-wrapped (string-escaped) form parses too
-    val wrapped =
-      """{"tail":"{\"queries\":{\"q03_filter\":2.5},\"sf\":\"z\"}"}"""
-    assert(parse(wrapped) == Map("q03_filter" -> 2.5))
+    // the wrapped (string-escaped) r1 baseline parses
+    // completely, and only at its own sf
+    assert(graft.Bench.r1QueryTimes("sf0.1").size == 46)
+    assert(graft.Bench.r1QueryTimes("sf0.01").isEmpty)
   }
 
   test("vs_prev baseline: history beats truncated wrapper; partials/cross-sf skipped") {
@@ -130,17 +125,18 @@ class EdgeCaseSpec extends SparkSpec {
       """{"metric":"total_median_sec","queries":{"q01_a":0.1},"sf":"/root/testdata/sf0.1"}""",
       """{"metric":"total_median_sec","queries":{"q01_a":9.0,"q02_b":9.0,"q03_c":9.0,"q04_d":9.0},"sf":"/root/testdata/sf0.01"}""",
     ).mkString("\n") + "\n")
-    val (label, prev) = graft.Bench.previousQueryTimes("/root/testdata/sf0.1", current, dir)
+    import graft.Bench.{previousQueryTimes, readHistory}
+    val (label, prev) = previousQueryTimes(readHistory(dir), "sf0.1", current)
     assert(label.contains("BENCH_HISTORY.jsonl#1"))
     assert(prev == Map("q01_a" -> 1.0, "q02_b" -> 2.0, "q03_c" -> 3.0, "q04_d" -> 4.0))
-    // with NO history file the wrapper fallback still degrades to
-    // "no baseline", never to garbage scraped from witness fragments
+    // with NO history file there is no baseline: never garbage scraped
+    // from witness fragments, and no wrapper label either
     val dir2 = java.nio.file.Files.createTempDirectory("bench_prev2").toFile
     dir2.deleteOnExit()
     java.nio.file.Files.writeString(new java.io.File(dir2, "BENCH_r09.json").toPath,
       """{"n":1,"tail":"steal\":0.001},\"q01_a\":{\"seq\":0.714,\"iso\":0.73"}""")
-    val (label2, prev2) = graft.Bench.previousQueryTimes("/root/testdata/sf0.1", current, dir2)
-    assert(label2.contains("BENCH_r09.json") && prev2.isEmpty)
+    val (label2, prev2) = previousQueryTimes(readHistory(dir2), "sf0.1", current)
+    assert(label2.isEmpty && prev2.isEmpty, label2.toString)
     // a history line with NO sf field must be skipped, not accepted as
     // a same-sf baseline (r11 ADVICE: forall on an empty Option is
     // true — a schema-drifted line would silently supply cross-sf
@@ -149,9 +145,23 @@ class EdgeCaseSpec extends SparkSpec {
     dir3.deleteOnExit()
     java.nio.file.Files.writeString(new java.io.File(dir3, "BENCH_HISTORY.jsonl").toPath,
       """{"metric":"total_median_sec","queries":{"q01_a":1.0,"q02_b":2.0,"q03_c":3.0,"q04_d":4.0}}""" + "\n")
-    val (label3, prev3) = graft.Bench.previousQueryTimes("/root/testdata/sf0.1", current, dir3)
+    val (label3, prev3) = previousQueryTimes(readHistory(dir3), "sf0.1", current)
     assert(!label3.exists(_.contains("HISTORY")), s"sf-less history line accepted: $label3")
     assert(prev3.isEmpty)
+    // a directory holding only a complete round-1-shaped wrapper (46
+    // queries escaped in the wrapper's tail) at ANOTHER sf: taking those
+    // times as vs_prev gives ratios near 0.1 that disarm the >1.5x
+    // witness and the big-regression signal
+    val dir4 = java.nio.file.Files.createTempDirectory("bench_prev4").toFile
+    dir4.deleteOnExit()
+    val r1Names = (1 to 46).map(i => f"q$i%02d_x")
+    val record = r1Names.map(n => raw"""\"$n\":0.5""").mkString(
+      """{\"metric\":\"total_median_sec\",\"queries\":{""", ",",
+      """},\"sf\":\"sf0.1\"}""")
+    java.nio.file.Files.writeString(new java.io.File(dir4, "BENCH_r01.json").toPath,
+      raw"""{"n":1,"rc":0,"sf":0.1,"tail":"[info] $record\n","parsed":null}""")
+    assert(previousQueryTimes(readHistory(dir4), "sf0.01", r1Names.toSet) ==
+      ((None, Map.empty)))
   }
 
   test("fresh-JVM tiebreaker fires on seq≈iso-but-regressed (r11 finding 1)") {
@@ -329,12 +339,13 @@ class EdgeCaseSpec extends SparkSpec {
       ).mkString("\n") + "\n")
     val cur = Seq("q01_a" -> 2.0, "q02_b" -> 3.0, "q03_c" -> 4.0, "q04_d" -> 4.0)
     val names = cur.map(_._1).toSet
-    val (label, prev) = graft.Bench.previousQueryTimes("/root/testdata/sf0.1", names, dir)
+    val history = graft.Bench.readHistory(dir)
+    val (label, prev) = graft.Bench.previousQueryTimes(history, "sf0.1", names)
     assert(label.contains("BENCH_HISTORY.jsonl#1"), label.toString)
     assert(prev("q01_a") == 1.0)
-    val tvh = graft.Bench.totalVsHistoryRatio(cur, "/root/testdata/sf0.1", dir)
+    val tvh = graft.Bench.totalVsHistoryRatio(history, "sf0.1", cur)
     assert(tvh.exists(x => math.abs(x - 1.3) < 1e-9), tvh.toString)
-    val cpu = graft.Bench.cpuControlHistoryMedian("/root/testdata/sf0.1", names, dir)
+    val cpu = graft.Bench.cpuControlHistoryMedian(history, "sf0.1")
     assert(cpu.contains(0.07), cpu.toString)
   }
 
@@ -395,16 +406,17 @@ class EdgeCaseSpec extends SparkSpec {
       new java.io.File(dir, "BENCH_HISTORY.jsonl").toPath, hist)
     val loadedRun = Seq("q01_a" -> 2.0, "q02_b" -> 3.0,
       "q03_c" -> 4.0, "q04_d" -> 4.0) // total 13 vs 10
-    val r = totalVsHistoryRatio(loadedRun, "/root/testdata/sf0.1", dir)
+    val history = graft.Bench.readHistory(dir)
+    val r = totalVsHistoryRatio(history, "sf0.1", loadedRun)
     assert(r.exists(x => math.abs(x - 1.3) < 1e-9), r.toString)
     // cpu-control history median parses from the same lines
-    val m = graft.Bench.cpuControlHistoryMedian(
-      "/root/testdata/sf0.1", Set("q01_a", "q02_b", "q03_c", "q04_d"), dir)
+    val m = graft.Bench.cpuControlHistoryMedian(history, "sf0.1")
     assert(m.contains(0.2), m.toString)
     // no qualifying history → no signal, never a garbage ratio
     val dir2 = java.nio.file.Files.createTempDirectory("bench_tvh2").toFile
     dir2.deleteOnExit()
-    assert(totalVsHistoryRatio(loadedRun, "/root/testdata/sf0.1", dir2).isEmpty)
+    assert(totalVsHistoryRatio(graft.Bench.readHistory(dir2), "sf0.1",
+      loadedRun).isEmpty)
   }
 
   test("history baselines require a similar run shape (round 14: probes vs full runs)") {
@@ -431,19 +443,19 @@ class EdgeCaseSpec extends SparkSpec {
     val cur = Seq("q01_a" -> 2.0, "q02_b" -> 2.0, "q03_c" -> 3.0, "q04_d" -> 3.0)
     // vs the like-shaped probe: 10/10 = 1.0; vs the full line it would
     // read 10/5 = 2.0 — the shape filter must pick the probe line
-    val r = totalVsHistoryRatio(cur, "/root/testdata/sf0.1", dir)
+    val history = graft.Bench.readHistory(dir)
+    val r = totalVsHistoryRatio(history, "sf0.1", cur)
     assert(r.exists(x => math.abs(x - 1.0) < 1e-9), r.toString)
     // the per-query vs_prev baseline applies the same shape filter:
     // the OLDER like-shaped probe line wins over the newer full line
     val (label, prev) = graft.Bench.previousQueryTimes(
-      "/root/testdata/sf0.1", cur.map(_._1).toSet, dir)
+      history, "sf0.1", cur.map(_._1).toSet)
     assert(label.contains("BENCH_HISTORY.jsonl#1"), label.toString)
     assert(prev("q01_a") == 2.0, prev.toString)
     // the cpu-control microbench is SHAPE-INDEPENDENT (round-14 review
     // finding): gating it on run shape would disarm the normalizer
     // exactly when the run shape changes — the median spans both lines
-    val cpu = graft.Bench.cpuControlHistoryMedian(
-      "/root/testdata/sf0.1", cur.map(_._1).toSet, dir)
+    val cpu = graft.Bench.cpuControlHistoryMedian(history, "sf0.1")
     assert(cpu.contains(0.07), cpu.toString) // median of [0.05, 0.07]
     // and a dir whose ONLY cpu_control carrier is a full-run line
     // still yields a baseline for a probe-shaped run
@@ -452,26 +464,16 @@ class EdgeCaseSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       new java.io.File(dir2, "BENCH_HISTORY.jsonl").toPath, fullLine + "\n")
     val cpu2 = graft.Bench.cpuControlHistoryMedian(
-      "/root/testdata/sf0.1", cur.map(_._1).toSet, dir2)
+      graft.Bench.readHistory(dir2), "sf0.1")
     assert(cpu2.contains(0.05), cpu2.toString)
   }
 
-  test("wrapper fallback: records/ scanned, empty wrappers skipped (round 14)") {
-    // with no usable history, the fallback must not pick the newest
-    // wrapper by round number when its parse is EMPTY (the rc-124
-    // BENCH_r13.json shape) — it falls through to the newest wrapper
-    // that actually parses, wherever it lives (root or records/)
-    val dir = java.nio.file.Files.createTempDirectory("bench_fb").toFile
-    dir.deleteOnExit()
-    java.nio.file.Files.writeString(new java.io.File(dir, "BENCH_r13.json").toPath,
-      """{"n":13,"rc":124,"tail":"WARN MicroBatchExecution...","parsed":null}""")
-    val rec = new java.io.File(dir, "records")
-    rec.mkdir()
-    java.nio.file.Files.writeString(new java.io.File(rec, "BENCH_r12.json").toPath,
-      """{"metric":"x","queries":{"q01_a":1.5,"q02_b":2.5},"sf":"/root/testdata/sf0.1"}""")
-    val (label, prev) = graft.Bench.previousQueryTimes(
-      "/root/testdata/sf0.1", Set("q01_a", "q02_b"), dir)
-    assert(label.contains("BENCH_r12.json"), label.toString)
-    assert(prev == Map("q01_a" -> 1.5, "q02_b" -> 2.5), prev.toString)
+  test("scale-stress blowup factor outside 2..26 fails fast, naming the knob") {
+    // n = 1 wrote a non-finite exponent (ln 1 = 0) into SCALE_STRESS.json
+    // and n <= 0 threw from an empty union midway through staging
+    for (n <- Seq(-1, 0, 1, 27)) {
+      val e = intercept[IllegalArgumentException](ScaleStress.stageBlowup(spark, sf, n))
+      assert(e.getMessage.contains("SPARK_GRAFT_SCALE"), e.getMessage)
+    }
   }
 }

@@ -221,8 +221,8 @@ class StreamingSpec extends SparkSpec {
     // a stream-stream join commits 4 state stores per partition per
     // batch; the derived count must (a) stay multi-partition and
     // (b) never exceed the family's per-batch commit budget
-    val fam = StreamingEvents.streamStatePartitions.toInt
-    val join = StreamingEvents.streamJoinStatePartitions.toInt
+    val fam = StreamingEvents.StreamStatePartitions
+    val join = StreamingEvents.StreamJoinStatePartitions
     assert(join >= 2, "join state must stay multi-partition")
     assert(join <= math.max(2, fam),
       "join partitions must not exceed the family count")
@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
     val pkey = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(pkey)
     intercept[RuntimeException] {
-      StreamingEvents.withStreamShuffle(spark, "3") {
+      StreamingEvents.withStreamShuffle(spark, 3) {
         assert(spark.conf.get(pkey) === "3")
         throw new RuntimeException("boom")
       }
